@@ -52,19 +52,16 @@ _MODULES = [
 # The driver's correctness gate records rows for the FIRST 50 queries in
 # dict-insertion order (observed: CORRECTNESS keys == queries()[:50] every
 # round).  Coverage rotates so no query's newest driver row goes stale.
-# Round-13 rotation (re-emitted by `scripts/plan_rotation.py` after
-# CORRECTNESS_r12.json landed 45 hash-green + 5 rows-only-by-design).
+# Round-13 rotation, the last one planned (emitted by the since-retired
+# rotation planner after CORRECTNESS_r12.json landed 45 hash-green + 5
+# rows-only-by-design).
 # Priority per the recorded evidence: (1) no red rows to retry; (2) the
 # four never-rowed queries get their FIRST driver rows — `sequence_pack`
 # (r12 closing amendment, verdict item 5) plus the round-13 additions
 # `pmi_stripes`, `bigram_relfreq_stripes` and `mat_manifest_compact`; (3) staleness refreshes,
 # oldest newest-row first: the 29 r9-rowed queries (they hit the age-4
-# bound this round) plus 18 of the r10-rowed ones.  The gate bound is
-# period-aware with a hard cap (`scripts/plan_rotation.py:max_row_age`,
-# ADVICE r11): allowed age = min(max(3, ceil(registry/50)), 5) = 4 at
-# 182 registered queries (the r13 closing amendment registered the
-# 182nd; the rotation math is unchanged).  `--check --project 4`
-# verifies the r13-r17 projections clean.
+# bound this round) plus 18 of the r10-rowed ones.  The time-dependent
+# staleness gate that checked this order is retired; the order is frozen.
 _HEAD = [
     "pmi_stripes",
     "sequence_pack",
@@ -124,7 +121,7 @@ _HEAD = [
 # replicates the driver's comparison, including its typed-value hash
 # sensitivity via the no-HUGEINT/DECIMAL-mismatch guard).  Queries added
 # mid-round and absent from both lists fall to the very tail (the never-rowed
-# queue, which plan_rotation prioritizes ahead of refreshes).
+# queue).
 _DEFERRED = [
     "customers_without_orders",
     "daily_activity_full",

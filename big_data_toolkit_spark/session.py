@@ -24,9 +24,18 @@ import os
 from pyspark.sql import SparkSession
 
 # Pre-AQE shuffle-partition bound for local[N] testing. On a 1000-executor
-# cluster this would be ~2-4x total cores; AQE coalesces small partitions
-# either way, so over-provisioning is cheap and under-provisioning is not.
+# cluster this would be ~2-4x total cores. In batch, AQE coalesces small
+# partitions, so over-provisioning is cheap there. Streaming runs with AQE
+# off: a stateful stream runs every one of these state partitions on every
+# micro-batch, and each commits a delta file plus checksums (about
+# 110-150 ms per partition on 4 cores, even when the partition is empty).
 _LOCAL_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
+
+# Top-level module (repo root) that the Python daemon runs in place of
+# ``pyspark.daemon``, so the workers import pyspark from the unzipped
+# ``$SPARK_HOME/python`` tree; see its docstring for the per-task cost this
+# removes.
+_PYTHON_DAEMON_MODULE = "spark_worker_daemon"
 
 
 def _ensure_workers_can_import_engine() -> None:
@@ -65,6 +74,7 @@ def build_spark(
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # --- Python <-> JVM data path ------------------------------------
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.daemon.module", _PYTHON_DAEMON_MODULE)
         # --- Timestamps: deterministic, TZ-independent semantics ---------
         .config("spark.sql.session.timeZone", "UTC")
         # Parquet filter pushdown is on by default; stated explicitly since

@@ -6,9 +6,6 @@
 set -e
 cd "$(dirname "$0")/.."
 
-echo "== 0/4 gate-rotation staleness check + 2-round projection (no Spark, ~1 s) =="
-python scripts/plan_rotation.py --check --project 2
-
 echo "== 1/4 oracle result-type sweep (no Spark, ~12 s) =="
 python scripts/preflight.py --types-only
 

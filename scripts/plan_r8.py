@@ -1,8 +1,8 @@
 #!/usr/bin/env python
 """HISTORICAL (r7 artifact): computed the r8 gate rotation that was then
-executed in `__spark_entry__._HEAD`. For r9 onward use
-`scripts/plan_rotation.py`, the generalized evidence-driven planner
-(red retries + never-rowed + staleness refreshes); this script's
+executed in `__spark_entry__._HEAD`. Its r9-r13 successor, the
+generalized planner behind the rotation staleness gate, has been retired
+with that gate; this script's
 SINGLE_R6 list and top-up logic are frozen to the r7 evidence and will
 NOT produce a correct head after CORRECTNESS_r08 lands.
 

@@ -89,63 +89,3 @@ def test_plan_budgets_pin_map_only_families():
     import __spark_entry__ as entry
 
     assert set(budgets) >= set(entry.queries()), "unbudgeted queries"
-
-
-def test_staleness_gate_on_synthetic_registry():
-    """scripts/plan_rotation.staleness_violations — the ci.sh 0/4 gate.
-
-    Synthetic registry: a head query (fresh row regardless of history),
-    an at-the-limit query (age exactly MAX_ROW_AGE -> allowed), an
-    over-the-limit query, and a never-rowed query outside the head."""
-    import importlib
-    import os
-    import sys
-
-    sys.path.insert(
-        0,
-        os.path.join(os.path.dirname(os.path.dirname(__file__)), "scripts"),
-    )
-    rotation = importlib.import_module("plan_rotation")
-
-    queries = ["in_head", "at_limit", "over_limit", "never_rowed"]
-    newest = {"in_head": 1, "at_limit": 6, "over_limit": 5}
-    bad = rotation.staleness_violations(
-        queries, newest, head=["in_head"], next_round=9, max_age=3
-    )
-    # never_rowed is NOT a violation (mid-round additions are legitimately
-    # unrowed until the next plan); only the over-age rowed query fires
-    assert bad == {"over_limit": 4}
-
-    # everything rowed recently or in the head -> clean
-    ok = rotation.staleness_violations(
-        queries,
-        {"at_limit": 8, "over_limit": 7, "never_rowed": 6},
-        head=["in_head"],
-        next_round=9,
-        max_age=3,
-    )
-    assert ok == {}
-
-
-def test_current_head_satisfies_staleness_gate():
-    """The COMMITTED _HEAD must keep every registered query within
-    MAX_ROW_AGE rounds of a driver row at the next round — the same check
-    ci.sh runs, asserted here so `pytest tests/` alone catches a bad
-    rotation edit."""
-    import importlib
-    import os
-    import sys
-
-    sys.path.insert(
-        0,
-        os.path.join(os.path.dirname(os.path.dirname(__file__)), "scripts"),
-    )
-    rotation = importlib.import_module("plan_rotation")
-
-    q, newest_round, _ = rotation.gather()
-    next_round = max(newest_round.values(), default=0) + 1
-    bad = rotation.staleness_violations(
-        q, newest_round, entry._HEAD, next_round
-    )
-    assert bad == {}, bad
-    assert len(entry._HEAD) <= 50
