@@ -11,9 +11,15 @@ Catalyst/AQE machinery that replaces all of that:
   partitioners (``a2/ComputeBigramRelativeFrequencyPairs.scala:24-30``).
 * Arrow for the few pandas-UDF paths (sequential SGD, multimodal decode).
 
-At 100 TB the same settings hold: AQE right-sizes reducers from map output
-statistics, so ``shuffle.partitions`` here is only the pre-AQE upper bound for
-local runs; on a real cluster you would raise the bound
+``spark.sql.shuffle.partitions`` is sized from what the session observes,
+not hand-set: on a ``local[N]`` master it is 2 × the session's
+``defaultParallelism`` (8 on ``local[4]``). Batch barely depends on it, since
+AQE coalesces every exchange to map-output sizes. Streaming does: AQE is off
+there, a stateful stream runs one task per state partition on every
+micro-batch and each commits a state-store version, empty or not. Spark
+pins the count in each checkpoint's offset log, so a restarted stream keeps
+the count it was started with. A non-local master gets a fixed pre-AQE
+bound instead; at 100 TB you would raise it
 (``spark.sql.shuffle.partitions=2000+``) and let AQE coalesce down.
 """
 
@@ -23,13 +29,14 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Pre-AQE shuffle-partition bound for local[N] testing. On a 1000-executor
-# cluster this would be ~2-4x total cores. In batch, AQE coalesces small
-# partitions, so over-provisioning is cheap there. Streaming runs with AQE
-# off: a stateful stream runs every one of these state partitions on every
-# micro-batch, and each commits a delta file plus checksums (about
-# 110-150 ms per partition on 4 cores, even when the partition is empty).
-_LOCAL_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
+# Shuffle and state partitions per core of a local master: two tasks per
+# core absorb key skew, while the empty ones cost a task launch and a state
+# commit (a delta file plus checksums) on every micro-batch of a stateful
+# stream, where AQE cannot coalesce them. The count a stream starts with is
+# written to its checkpoint and reused on restart.
+_SHUFFLE_PARTITIONS_PER_LOCAL_CORE = 2
+# Pre-AQE bound for any other master; AQE coalesces batch exchanges below it.
+_NONLOCAL_SHUFFLE_PARTITIONS = 32
 
 # Top-level module (repo root) that the Python daemon runs in place of
 # ``pyspark.daemon``, so the workers import pyspark from the unzipped
@@ -67,8 +74,7 @@ def build_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # --- Shuffle sizing ---------------------------------------------
-        .config("spark.sql.shuffle.partitions", _LOCAL_SHUFFLE_PARTITIONS)
+        # --- Scan sizing (shuffle sizing follows getOrCreate) ----------
         # Target split size for file scans; 128 MB is the classic sweet spot
         # (matches parquet row-group sizing at scale).
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
@@ -83,7 +89,21 @@ def build_spark(
     )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    if "spark.sql.shuffle.partitions" not in (extra_conf or {}):
+        spark.conf.set(
+            "spark.sql.shuffle.partitions",
+            str(_shuffle_partitions(spark.sparkContext)),
+        )
+    return spark
+
+
+def _shuffle_partitions(sc) -> int:
+    """2 × the cores of a ``local``/``local[N]``/``local[*]`` master, which
+    ``defaultParallelism`` reports; the fixed bound for any other master."""
+    if sc.master == "local" or sc.master.startswith("local["):
+        return _SHUFFLE_PARTITIONS_PER_LOCAL_CORE * sc.defaultParallelism
+    return _NONLOCAL_SHUFFLE_PARTITIONS
 
 
 def get_spark() -> SparkSession:

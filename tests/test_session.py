@@ -1,14 +1,22 @@
-"""The Python daemon's ``sys.path`` rewrite (``spark_worker_daemon``): a
-Spark-free check of the rewrite itself, and a check from inside a worker of
-the shared test session that pyspark comes from ``$SPARK_HOME/python``."""
+"""What ``build_spark`` sets up, checked on the shared test session.
+
+The Python daemon's ``sys.path`` rewrite (``spark_worker_daemon``): a
+Spark-free check of the rewrite itself, and a check from inside a worker
+that pyspark comes from ``$SPARK_HOME/python``. The shuffle and state
+partitions: sized from the session's cores, and pinned per checkpoint for a
+stream started before that sizing."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
 
 import spark_worker_daemon
+from big_data_toolkit_spark.catalog import load_table
+from big_data_toolkit_spark.streaming import trending, windows
+from tests.conftest import SF_SMOKE
 
 
 def _fake_spark_home(tmp_path, with_tree=True):
@@ -116,3 +124,105 @@ def test_workers_import_pyspark_from_spark_home_tree(spark):
         if real(key).startswith(spark_zip) or real(key).startswith(spark_jars)
     ]
     assert not stale, stale
+
+
+def _event_half_writer(spark, src):
+    """The smoke corpus's events in time order, cut in two. Returns their
+    schema and ``write(i)``, which writes half ``i`` as the ``i``-th file
+    under ``src``: one file per micro-batch."""
+    events = load_table(spark, SF_SMOKE, "events").orderBy("ts")
+    rows = events.collect()
+    halves = (rows[: len(rows) // 2], rows[len(rows) // 2 :])
+
+    def write(i):
+        spark.createDataFrame(halves[i], events.schema).coalesce(1).write.parquet(
+            os.path.join(src, f"batch_{i:04d}")
+        )
+
+    return events.schema, write
+
+
+def _replay_trending(spark, schema, src, out):
+    """Run ``stream_trending`` over every file under ``src`` not yet in the
+    checkpoint under ``out``, one file per micro-batch, appending to the
+    parquet sink in ``out``. A file sink, unlike the memory sink, can
+    restart from its checkpoint."""
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(os.path.join(src, "batch_*"))
+    )
+    query = (
+        trending.stream_trending(stream)
+        .writeStream.format("parquet")
+        .outputMode("append")
+        .option("path", os.path.join(out, "rows"))
+        .option("checkpointLocation", os.path.join(out, "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    query.awaitTermination(300)
+    assert query.exception() is None
+    return [json.loads(p.json) for p in query.recentProgress]
+
+
+def _final_trend_rows(spark, out):
+    """The last update per (key, window) in the sink under ``out``."""
+    final: dict = {}
+    for r in spark.read.parquet(os.path.join(out, "rows")).collect():
+        k = (r["event_type"], r["window_start"])
+        if k not in final or r["cnt"] > final[k]["cnt"]:
+            final[k] = r
+    return {
+        (k[0], k[1], v["cnt"], v["prev_cnt"], v["trending"])
+        for k, v in final.items()
+    }
+
+
+def test_shuffle_and_state_partitions_are_twice_the_local_cores(
+    spark, tmp_path
+):
+    assert spark.sparkContext.defaultParallelism == 4
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+
+    src = str(tmp_path / "src")
+    schema, write = _event_half_writer(spark, src)
+    write(0)
+    write(1)
+    progress = _replay_trending(spark, schema, src, str(tmp_path / "out"))
+
+    assert len(progress) == 2
+    for p in progress:
+        assert p["stateOperators"][0]["numShufflePartitions"] == 8
+
+
+def test_checkpoint_keeps_the_partition_count_it_started_with(
+    spark, tmp_path
+):
+    """A stream whose checkpoint was written with 32 state partitions
+    restarts on the sized default with its own 32: its keys stay in the
+    state partitions that hold them, so the state carries over."""
+    key = "spark.sql.shuffle.partitions"
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    schema, write = _event_half_writer(spark, src)
+    write(0)
+    default = spark.conf.get(key)
+    spark.conf.set(key, "32")
+    try:
+        first = _replay_trending(spark, schema, src, out)
+    finally:
+        spark.conf.set(key, default)
+    assert [p["stateOperators"][0]["numShufflePartitions"] for p in first] == [32]
+
+    write(1)
+    assert spark.conf.get(key) == "8"
+    second = _replay_trending(spark, schema, src, out)
+
+    assert [p["batchId"] for p in second] == [1]
+    assert second[-1]["stateOperators"][0]["numShufflePartitions"] == 32
+    got = _final_trend_rows(spark, out)
+    expected = {
+        (r["event_type"], r["window_start"], r["cnt"], r["prev_cnt"], r["trending"])
+        for r in windows.trending_events(spark, SF_SMOKE).collect()
+    }
+    assert got == expected
