@@ -2,283 +2,20 @@
 
 ``entry(spark)`` runs the flagship query (Q4: filtered fact join chain +
 per-nation aggregation) at sf0.001. ``queries()`` / ``oracle_sql()`` expose
-every implemented operator from SURVEY.md §2 for the DuckDB correctness gate.
+every implemented operator from SURVEY.md §2 for the DuckDB correctness gate;
+both come from ``big_data_toolkit_spark.registry``.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 
-from big_data_toolkit_spark.multimodal import binary_ops as multimodal
-from big_data_toolkit_spark.operators import (
-    analytics_ext,
-    curation,
-    dedup,
-    inverted_index,
-    pagerank,
-    quality,
-    relational_ext,
-    similarity,
-    spam,
-    sql_analytics,
-    text_analytics,
-)
-from big_data_toolkit_spark.plans import materialize, scale
-from big_data_toolkit_spark.streaming import anomaly as streaming_anomaly
-from big_data_toolkit_spark.streaming import windows as streaming_windows
+from big_data_toolkit_spark.operators import sql_analytics
+from big_data_toolkit_spark.registry import oracle_sql, queries
 
-_MODULES = [
-    sql_analytics,
-    text_analytics,
-    inverted_index,
-    spam,
-    pagerank,
-    streaming_windows,
-    streaming_anomaly,
-    dedup,
-    similarity,
-    quality,
-    relational_ext,
-    analytics_ext,
-    multimodal,
-    curation,
-    scale,
-    materialize,
-]
-
-
-# The driver's correctness gate records rows for the FIRST 50 queries in
-# dict-insertion order (observed: CORRECTNESS keys == queries()[:50] every
-# round).  Coverage rotates so no query's newest driver row goes stale.
-# Round-13 rotation, the last one planned (emitted by the since-retired
-# rotation planner after CORRECTNESS_r12.json landed 45 hash-green + 5
-# rows-only-by-design).
-# Priority per the recorded evidence: (1) no red rows to retry; (2) the
-# four never-rowed queries get their FIRST driver rows — `sequence_pack`
-# (r12 closing amendment, verdict item 5) plus the round-13 additions
-# `pmi_stripes`, `bigram_relfreq_stripes` and `mat_manifest_compact`; (3) staleness refreshes,
-# oldest newest-row first: the 29 r9-rowed queries (they hit the age-4
-# bound this round) plus 18 of the r10-rowed ones.  The time-dependent
-# staleness gate that checked this order is retired; the order is frozen.
-_HEAD = [
-    "pmi_stripes",
-    "sequence_pack",
-    "mat_manifest_compact",
-    "bigram_relfreq_stripes",
-    "ranked_retrieval_bm25",
-    "span_dedup",
-    "semantic_dedup",
-    "dsir_weights",
-    "hybrid_retrieval",
-    "triangle_count",
-    "bigram_logprob",
-    "event_funnel",
-    "q1_count_shipped",
-    "q2_orders_shipped",
-    "q3_part_supplier_shipped",
-    "q4_orders_by_nation",
-    "word_count",
-    "next_word_after",
-    "bigram_relative_frequency",
-    "pmi_pairs",
-    "inverted_index",
-    "boolean_and",
-    "boolean_or",
-    "boolean_mixed",
-    "spam_score",
-    "spam_ensemble",
-    "pagerank_top20",
-    "region_event_count",
-    "trending_events",
-    "dedup_minhash_lsh",
-    "simhash_fingerprints",
-    "dedup_simhash",
-    "dedup_embedding_lsh",
-    "ann_pq_incremental",
-    "audio_spectral_features",
-    "dedup_incremental_bloom_sharded",
-    "knn_ivfpq",
-    "knn_join_pq",
-    "events_gapfill_locf",
-    "leakage_safe_split",
-    "dedup_keep_canonical",
-    "knn_brute_force",
-    "quality_score",
-    "asof_purchase_attribution",
-    "error_bursts",
-    "top_orders_per_priority",
-    "lineitem_stats",
-    "event_count_sliding",
-    "user_sessions",
-    "curated_corpus",
-]
-
-# Deferred queries, ordered by staleness (newest driver row round ascending,
-# registry order) — the r12 refresh priority order.  Every deferred query
-# remains registered and pytest-oracle-covered (tests/oracle_utils.compare
-# replicates the driver's comparison, including its typed-value hash
-# sensitivity via the no-HUGEINT/DECIMAL-mismatch guard).  Queries added
-# mid-round and absent from both lists fall to the very tail (the never-rowed
-# queue).
-_DEFERRED = [
-    "customers_without_orders",
-    "daily_activity_full",
-    "never_ordered_parts",
-    "image_features",
-    "shard_pack",
-    "keyword_extraction",
-    "ranked_retrieval_tfidf",
-    "kcore_subgraph",
-    "event_count_hourly",
-    "online_user_anomalies",
-    "dedup_exact",
-    "dedup_ngram_jaccard",
-    "dedup_components",
-    "dedup_incremental",
-    "dedup_embedding_cosine",
-    "dedup_embedding_ivf",
-    "cross_source_leakage",
-    "knn_lsh",
-    "ivf_assignments",
-    "knn_ivf",
-    "knn_int8",
-    "label_centroids",
-    "lang_id",
-    "token_count",
-    "fingerprint",
-    "repetition_score",
-    "unigram_logprob",
-    "benchmark_contamination",
-    "quality_quantile_filter",
-    "corpus_stats_by_source",
-    "vocab_coverage",
-    "orders_rollup",
-    "events_cube",
-    "dedup_keep_best",
-    "training_manifest",
-    "manifest_ingest_delta",
-    "order_fulfillment_percentiles",
-    "session_paths",
-    "orders_grouping_sets",
-    "customer_order_timeline",
-    "customer_spend_quartiles",
-    "user_event_matrix",
-    "json_props_stats",
-    "event_reach",
-    "retention_cohorts",
-    "user_activity_anomalies",
-    "event_value_histogram",
-    "multimodal_meta",
-    "video_frame_sample",
-    "hash_sample",
-    "stratified_sample",
-    "source_mix",
-    "temperature_mix",
-    "chunk_documents",
-    "priority_sample",
-    "distinct_users_by_type",
-    "skewed_join_enrich",
-    "user_value_moving_avg",
-    "nearest_centroid_confusion",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q1_pricing_summary",
-    "q10_returned_items",
-    "q19_discounted_revenue",
-    "customer_rfm",
-    "order_backlog_timeline",
-    "audience_overlap",
-    "dormant_rich_customers",
-    "audience_overlap_approx",
-    "bpe_merges",
-    "bpe_vocab",
-    "heavy_hitters_cms",
-    "embedding_covariance",
-    "embedding_outliers",
-    "corpus_shuffle",
-    "part_affinity",
-    "integrity_audit",
-    "fuzzy_name_matches",
-    "snapshot_diff",
-    "q5_local_supplier_volume",
-    "batch_gd_train",
-    "batch_gd_score",
-    "manifest_compact",
-    "mat_dedup_keep_best",
-    "mat_training_manifest",
-    "mat_knn_ivfpq",
-    "pca_variance",
-    "dau_wau_stickiness",
-    "customer_cohort_ltv",
-    "order_fulfillment_percentiles_approx",
-    "index_merge_incremental",
-    "weekly_reach_from_sketches",
-    "label_propagation_communities",
-    "boolean_and_not",
-    "phrase_search",
-    "q6_forecast_revenue",
-    "priority_revenue_share",
-    "q3_shipping_priority",
-    "q14_promo_revenue",
-    "q18_large_volume_customers",
-    "q4_order_priority_checking",
-    "audio_wav_features",
-    "image_png_features",
-    "duplicate_ngram_spans",
-    "remove_duplicate_spans",
-    "q13_customer_distribution",
-    "q17_small_quantity_revenue",
-    "q15_top_supplier",
-    "q11_important_parts",
-    "q16_supplier_part_variety",
-    "dedup_star_components",
-    "q9_product_type_profit",
-    "q12_late_priority_lines",
-    "q20_potential_promotion",
-    "q21_waiting_suppliers",
-    "q2_min_cost_supplier",
-    "dedup_incremental_bloom",
-    "dedup_minhash_incremental",
-    "pq_codes",
-    "knn_pq",
-    "knn_pq_rerank",
-    "image_jpeg_features",
-    "scd2_history",
-    "dedup_embedding_incremental",
-    "sgd_train",
-    "sgd_score",
-    "event_reach_approx",
-    "kmeans_clusters",
-    "cluster_balanced_sample",
-    "text_clean",
-    "pii_redaction",
-    "knn_ivf_trained",
-]
-
-
-def _ordered(full: dict) -> dict:
-    head = {k: full[k] for k in _HEAD if k in full}
-    tail = {k: full[k] for k in _DEFERRED if k in full}
-    rest = {k: v for k, v in full.items() if k not in head and k not in tail}
-    return {**head, **tail, **rest}
+__all__ = ["entry", "oracle_sql", "queries"]
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
     return sql_analytics.q4_orders_by_nation(spark, "/root/testdata/sf0.001")
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    for mod in _MODULES:
-        out.update(mod.QUERIES)
-    return _ordered(out)
-
-
-def oracle_sql() -> dict[str, str]:
-    out: dict[str, str] = {}
-    for mod in _MODULES:
-        out.update(mod.ORACLE_SQL)
-    return _ordered(out)

@@ -22,47 +22,7 @@ from __future__ import annotations
 import argparse
 import sys
 
-
-def _registry():
-    from big_data_toolkit_spark.multimodal import binary_ops as multimodal
-    from big_data_toolkit_spark.operators import (
-        analytics_ext,
-        curation,
-        dedup,
-        inverted_index,
-        pagerank,
-        quality,
-        relational_ext,
-        similarity,
-        spam,
-        sql_analytics,
-        text_analytics,
-    )
-    from big_data_toolkit_spark.plans import materialize, scale
-    from big_data_toolkit_spark.streaming import anomaly as streaming_anomaly
-    from big_data_toolkit_spark.streaming import windows as streaming_windows
-
-    out = {}
-    for mod in (
-        sql_analytics,
-        text_analytics,
-        inverted_index,
-        spam,
-        pagerank,
-        streaming_windows,
-        streaming_anomaly,
-        dedup,
-        similarity,
-        quality,
-        relational_ext,
-        analytics_ext,
-        multimodal,
-        curation,
-        scale,
-        materialize,
-    ):
-        out.update(mod.QUERIES)
-    return out
+from big_data_toolkit_spark.registry import queries
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -106,7 +66,7 @@ def main(argv: list[str] | None = None) -> int:
     )
 
     args = parser.parse_args(argv)
-    registry = _registry()
+    registry = queries()
 
     if args.cmd == "list":
         for name in sorted(registry):

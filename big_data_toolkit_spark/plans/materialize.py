@@ -28,10 +28,6 @@ Artifacts:
   ``dedup_keep_canonical`` / ``leakage_safe_split`` key on: survivor
   selection and train/val/test assignment are then ONE corpus × tiny
   left join each, with zero MinHash or propagation work per run.
-
-``materialized_graph_suite`` is the bench form: one artifact build + all
-five consumers, demonstrating the saved recompute vs running the five
-in-plan queries independently.
 """
 
 from __future__ import annotations
@@ -349,60 +345,11 @@ def manifest_compact_materialized(
     )
 
 
-_CONSUMERS = (
-    triangle_count_materialized,
-    kcore_subgraph_materialized,
-    cross_source_leakage_materialized,
-    semantic_dedup_materialized,
-    knn_ivf_trained_materialized,
-    dedup_keep_canonical_materialized,
-    leakage_safe_split_materialized,
-    dedup_keep_best_materialized,
-    training_manifest_materialized,
-    manifest_compact_materialized,
-)
-
-
-def materialized_graph_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Build the three shared artifacts (pair graph, centroids, component
-    closure) into a scratch dir, run every ``_CONSUMERS`` entry, and
-    return one (consumer, n_rows) summary row per consumer.
-
-    The test entry for the artifact-sharing pattern: its wall-clock covers
-    ONE pair-graph build + ONE centroid training + ONE closure derivation
-    + all consumers, vs as many independent in-plan recomputes for the
-    gated query forms (per-consumer bench lines are the ``mat_*`` entries).
-    Scratch lives under the JVM's Spark local dir (cleaned with the
-    session)."""
-    import shutil
-    import tempfile
-
-    workdir = tempfile.mkdtemp(prefix="bdts-artifacts-")
-    try:
-        build_artifacts(spark, sf_dir, workdir)
-        counts = [
-            (
-                fn.__name__.replace("_materialized", ""),
-                fn(spark, sf_dir, workdir).count(),
-            )
-            for fn in _CONSUMERS
-        ]
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
-    # summary rows are driver-local after the eager counts — safe to drop
-    # the scratch dir before returning the DataFrame.
-    return local_table(spark, counts, "consumer string, n_rows long").orderBy(
-        "consumer"
-    )
-
-
 # ---------------------------------------------------------------------------
-# Per-stage bench surfaces (VERDICT r7 item 8): the single 15 s
-# ``materialized_suite`` aggregate obscured per-consumer regressions, so the
-# bench reports the artifact build and each consumer as SEPARATE lines.  The
-# build caches its workdir per (process, sf_dir); consumer wrappers reuse it
-# (building on miss so each is also runnable standalone).  BASELINE.md maps
-# the old aggregate line onto these six.
+# Per-stage bench surfaces: the artifact build and each consumer are
+# separate bench lines, so one consumer's regression cannot hide in a total.
+# The build caches its workdir per (process, sf_dir); consumer wrappers
+# reuse it (building on miss so each is also runnable standalone).
 # ---------------------------------------------------------------------------
 
 _BENCH_WORKDIRS: dict[str, str] = {}
@@ -839,6 +786,27 @@ def bench_knn_join_pq_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     return knn_join_pq_materialized(
         spark, sf_dir, _pq_bench_workdir(spark, sf_dir)
     )
+
+
+# Bench lines that are not registered queries: the two artifact builds, and
+# the stored-artifact consumers without their own oracle row (each is pinned
+# bit-equal to its in-plan twin in tests/test_materialize.py). bench.py times
+# them after the registry; ``QUERIES`` below holds the registered consumers.
+BENCH_ONLY = {
+    "mat_artifact_build": bench_artifact_build,
+    "mat_triangle_count": bench_triangle_count,
+    "mat_kcore_subgraph": bench_kcore_subgraph,
+    "mat_cross_source_leakage": bench_cross_source_leakage,
+    "mat_semantic_dedup": bench_semantic_dedup,
+    "mat_knn_ivf_trained": bench_knn_ivf_trained,
+    "mat_dedup_keep_canonical": bench_dedup_keep_canonical,
+    "mat_leakage_safe_split": bench_leakage_safe_split,
+    "mat_manifest_ingest_delta": bench_manifest_ingest_delta,
+    "mat_pq_build": bench_pq_build,
+    "mat_knn_pq": bench_knn_pq_stored,
+    "mat_ann_pq_incremental": bench_ann_pq_incremental_stored,
+    "mat_knn_join_pq": bench_knn_join_pq_stored,
+}
 
 
 # ---------------------------------------------------------------------------

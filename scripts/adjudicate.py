@@ -1,26 +1,26 @@
 #!/usr/bin/env python
-"""Generic same-session interleaved-trials adjudicator (BASELINE.md r5
-protocol, generalized from adjudicate_q1q2.py).
+"""Same-session interleaved-trials adjudicator.
 
-When a driver bench line regresses vs the previous round with untouched
-plans, the question is "real plan regression or machine/bench drift?".
-Answer it by measuring the SAME plans in one session, interleaved so no
-query systematically absorbs warmup or cache-state cost:
+When a bench line regresses vs the previous run with untouched plans,
+the question is "real plan regression or machine/bench drift?". Answer it
+by measuring the SAME plans in one session, interleaved so no query
+systematically absorbs warmup or cache-state cost:
 
   Phase A: bench.py's exact burn-in (2 untimed rounds over the 5 shared
-           plan shapes), so steady state matches the driver sweep.
+           plan shapes), so steady state matches the bench sweep.
   Phase B: N interleaved trials — round-robin over the named queries,
            timing each execution with bench.force (noop sink).
 
-Medians land either near the old round's number (drift — adjudicate as
+Medians land either near the old run's number (drift — adjudicate as
 noise, record in BASELINE.md) or near the regressed number (real — go
 profile the plan).
 
 Usage:
-    python scripts/adjudicate.py lpa_communities batch_gd_train ...
+    python scripts/adjudicate.py label_propagation_communities batch_gd_train ...
     python scripts/adjudicate.py --trials 5 --sf-dir /root/testdata/sf0.1 ...
 
-Names are bench.py HEADLINE keys.
+Names are bench line names: registry names, or keys of
+``materialize.BENCH_ONLY``.
 """
 
 from __future__ import annotations
@@ -35,16 +35,16 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402
-from big_data_toolkit_spark.operators import (  # noqa: E402
-    sql_analytics,
-    text_analytics,
-)
 from big_data_toolkit_spark.session import build_spark  # noqa: E402
 
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("names", nargs="+", help="bench.py HEADLINE keys")
+    ap.add_argument(
+        "names",
+        nargs="+",
+        help="bench line names (registry or materialize.BENCH_ONLY)",
+    )
     ap.add_argument("--trials", type=int, default=5)
     ap.add_argument(
         "--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR",
@@ -61,15 +61,7 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     # Phase A — bench.py's exact burn-in.
-    for _ in range(2):
-        for warm_fn in (
-            sql_analytics.q1_count_shipped,
-            sql_analytics.q2_orders_shipped,
-            sql_analytics.q3_part_supplier_shipped,
-            sql_analytics.q4_orders_by_nation,
-            text_analytics.word_count,
-        ):
-            bench.force(warm_fn(spark, args.sf_dir))
+    bench.burn_in(spark, args.sf_dir)
     # Plus one untimed pass of each adjudicated query itself, matching the
     # per-plan warmup the driver sweep gives every timed slot.
     for name in args.names:

@@ -1,16 +1,14 @@
 #!/usr/bin/env python
-"""Pre-round driver-contract sweep: replicate the external driver's checks
-for EVERY registered query, not just the 50-row gate window.
+"""Driver-contract sweep: replicate the external driver's checks for EVERY
+registered query.
 
 Usage:
     python scripts/preflight.py                 # full registry at sf0.01
-    python scripts/preflight.py --head-only     # gate window only
     python scripts/preflight.py shard_pack pmi_pairs   # named queries
 
 Exit code 0 iff every checked query passes (oracle MATCH, or rows>0 for the
-rows-only-by-design trio). Prints one summary line per query and a final
-JSON tally — the same evidence the round's CORRECTNESS file will record,
-available before committing.
+six rows-only-by-design queries). Prints one summary line per query and a
+final JSON tally.
 """
 
 from __future__ import annotations
@@ -33,9 +31,6 @@ def main() -> int:
     ap.add_argument("names", nargs="*", help="specific queries (default all)")
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
     ap.add_argument(
-        "--head-only", action="store_true", help="gate window (first 50) only"
-    )
-    ap.add_argument(
         "--strict",
         action="store_true",
         help="full-precision float comparison (replicates the driver hash)",
@@ -57,8 +52,6 @@ def main() -> int:
             print(f"unknown queries: {unknown}", file=sys.stderr)
             return 2
         items = [(n, queries[n]) for n in args.names]
-    elif args.head_only:
-        items = list(queries.items())[:50]
     else:
         items = list(queries.items())
 

@@ -36,6 +36,20 @@ def test_headline_covers_baseline_subset():
     assert not missing, f"baseline queries missing from HEADLINE: {missing}"
 
 
+def test_headline_names_are_registry_or_bench_only():
+    from big_data_toolkit_spark.plans import materialize
+    from big_data_toolkit_spark.registry import queries
+
+    registry = queries()
+    assert not set(materialize.BENCH_ONLY) & set(registry)
+    unknown = [
+        n for n in bench.HEADLINE
+        if n not in registry and n not in materialize.BENCH_ONLY
+    ]
+    assert not unknown, f"bench lines outside the registry: {unknown}"
+    assert set(registry) - set(bench.HEADLINE) == {bench.BENCH_EXCLUDED}
+
+
 def test_baseline_retrials_medians(spark, monkeypatch):
     """The governing subset numbers are interleaved-trial medians: the
     sweep value is trial 1, retrials append, and one slow outlier trial
@@ -99,13 +113,15 @@ def test_flag_tail_lines_protocol():
     """r12 verdict item 1: only non-baseline lines that exceed BOTH the
     ratio and the absolute floor against a recorded prior are flagged."""
     sweep = {
-        "q1": 9.0,          # baseline member — median-protected, never flagged
+        "q1_count_shipped": 9.0,  # baseline member — never flagged
         "slow": 3.0,        # 3x prior, +2.0s  -> flagged
         "tiny": 0.06,       # 3x prior but +0.04s, under floor -> noise
         "steady": 1.01,     # ~1x prior -> clean
         "brand_new": 5.0,   # no prior -> nothing to compare
     }
-    prior = {"q1": 1.0, "slow": 1.0, "tiny": 0.02, "steady": 1.0}
+    prior = {
+        "q1_count_shipped": 1.0, "slow": 1.0, "tiny": 0.02, "steady": 1.0
+    }
     flagged = bench.flag_tail_lines(sweep, prior)
     assert flagged == {"slow": 3.0}
 

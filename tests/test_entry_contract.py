@@ -1,9 +1,9 @@
 """Guards on the driver contract in __spark_entry__.py.
 
-The external driver records correctness rows for the FIRST 50 queries in
-dict order (observed r1/r2: CORRECTNESS keys == queries()[:50]); these
-tests keep the registration surface and the rotation invariants from
-regressing silently.
+The driver imports ``entry``, ``queries`` and ``oracle_sql`` from it, and
+both maps come from ``big_data_toolkit_spark.registry``. These tests keep
+the registration surface, its oracle coverage and the benchmark's view of
+it from regressing silently.
 """
 
 from __future__ import annotations
@@ -28,41 +28,32 @@ def test_registry_shape():
     }
 
 
-def test_deferred_are_registered_and_tail():
-    q = list(entry.queries())
-    assert set(entry._DEFERRED) <= set(q)
-    # deferred queries sit strictly after the 50-row gate window
-    for name in entry._DEFERRED:
-        assert q.index(name) >= 50, name
-    # the gate window is exactly filled by _HEAD; mid-round additions
-    # (in neither list) fall to the very tail, after the deferred block
-    assert len(entry._HEAD) == 50
-    assert q[:50] == [k for k in entry._HEAD if k in q]
-    rest = [k for k in q if k not in set(entry._HEAD) | set(entry._DEFERRED)]
-    for name in rest:
-        assert q.index(name) >= 50 + len(entry._DEFERRED), name
+def test_perfbench_workloads_resolve_in_registry(monkeypatch):
+    """perfbench/workloads.py names engine queries by registry name and
+    artifact writers by their ``plans.materialize`` attribute; every one
+    must resolve, or the benchmark fails on a missing name."""
+    import importlib.util
+    import os
+    import sys
 
+    from big_data_toolkit_spark.plans import materialize
 
-def test_gate_window_has_oracle_coverage():
-    q = list(entry.queries())
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(__file__)), "perfbench", "workloads.py"
+    )
+    spec = importlib.util.spec_from_file_location("perfbench_workloads", path)
+    workloads = importlib.util.module_from_spec(spec)
+    # dataclasses resolve annotations through the module's sys.modules entry
+    monkeypatch.setitem(sys.modules, spec.name, workloads)
+    spec.loader.exec_module(workloads)
+
+    q = entry.queries()
     o = entry.oracle_sql()
-    head = q[:50]
-    # r8 rotation: the head admits rows-only-BY-DESIGN queries (sketches /
-    # eigendecompositions have no SQL oracle form) because they too need
-    # driver rows; every other head query must carry a DuckDB oracle —
-    # a missing oracle on an oracle-able query would silently downgrade
-    # its driver row to the weaker rows-only check.
-    rows_only_by_design = {
-        "sgd_train",
-        "sgd_score",
-        "event_reach_approx",
-        "order_fulfillment_percentiles_approx",
-        "weekly_reach_from_sketches",
-        "audience_overlap_approx",
-    }
-    missing = [k for k in head if k not in o and k not in rows_only_by_design]
-    assert not missing, missing
-    assert sum(1 for k in head if k in o) >= 45
+    for wl in workloads.WORKLOADS.values():
+        for name in wl.queries:
+            assert name in q and name in o, name
+        for writer in wl.writers:
+            assert callable(getattr(materialize, writer, None)), writer
 
 
 def test_plan_budgets_pin_map_only_families():

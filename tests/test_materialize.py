@@ -110,27 +110,6 @@ def test_manifest_compact_materialized_equals_inplan(spark, workdir):
     ) == _rows(curation.manifest_compact(spark, SF_SMOKE))
 
 
-def test_suite_summary_counts(spark):
-    rows = {
-        r["consumer"]: r["n_rows"]
-        for r in materialize.materialized_graph_suite(spark, SF_SMOKE).collect()
-    }
-    assert set(rows) == {
-        "triangle_count",
-        "kcore_subgraph",
-        "cross_source_leakage",
-        "semantic_dedup",
-        "knn_ivf_trained",
-        "dedup_keep_canonical",
-        "leakage_safe_split",
-        "dedup_keep_best",
-        "training_manifest",
-        "manifest_compact",
-    }
-    assert rows["triangle_count"] == 1  # single summary row by contract
-    assert all(n >= 0 for n in rows.values())
-
-
 @pytest.fixture(scope="module")
 def pq_workdir(spark, tmp_path_factory):
     wd = str(tmp_path_factory.mktemp("pq-artifact"))
