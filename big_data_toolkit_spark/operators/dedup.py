@@ -43,6 +43,7 @@ from pyspark.sql.functions import pandas_udf
 
 from big_data_toolkit_spark.catalog import load_table, table_row_count
 from big_data_toolkit_spark.functions.text import DUCKDB_TOKENS, tokenize
+from big_data_toolkit_spark.plans.iterate import Probe, checkpoint, iterate
 
 SHINGLE_N = 3
 JACCARD_THRESHOLD = 0.5
@@ -657,61 +658,45 @@ def dedup_components(
         .distinct()
         .withColumn("comp", F.col("doc_id"))
     )
-    from pyspark.sql import Observation
 
-    for i in range(CC_ITERS):
+    def _round(labels: DataFrame, probed: bool) -> DataFrame:
         # comp'(v) = min over {comp(u) : u ∈ N(v) ∪ {v}} — identical to
         # least(comp(v), min over neighbours' comp) because the edge set
         # carries the self-loops, and every node has one, so no node drops
         # out of the aggregate (the old outer-join-back is unnecessary).
         #
-        # Checkpoint rounds additionally keep the node's OWN previous label
-        # (the self-loop row is exactly the (d1 == d2) join partner, so
-        # min(when(d1 == d2, comp)) is comp_{i-1}(v) — no extra join) and
-        # observe the changed-label count during the checkpoint job.
-        probe = i % 2 == 1 and i != CC_ITERS - 1
+        # Probed rounds also keep the node's OWN previous label (the
+        # self-loop row is exactly the (d1 == d2) join partner, so
+        # min(when(d1 == d2, comp)) is comp_{i-1}(v) — no extra join) for
+        # the changed-label count.
         aggs = [F.min("comp").alias("comp")]
-        if probe:
-            aggs.append(
-                F.min(
-                    F.when(edges["d1"] == edges["d2"], F.col("comp"))
-                ).alias("_prev")
-            )
-        labels = (
+        if probed:
+            own = F.when(edges["d1"] == edges["d2"], F.col("comp"))
+            aggs.append(F.min(own).alias("_prev"))
+        return (
             edges.join(labels, edges["d2"] == labels["doc_id"])
             .groupBy(edges["d1"].alias("doc_id"))
             .agg(*aggs)
         )
-        # Cap the unrolled lineage: without this, round N's plan nests 2N
-        # joins and the planner/codegen cost compounds (and a failure
-        # re-executes the whole chain). The label set is pair-graph-sized
-        # (≪ corpus), so materializing it every 2 rounds is cheap and
-        # keeps every plan ≤ 2 joins deep at any graph scale.
-        #
-        # Convergence early-exit (r14, guide §1.5/§2.4): the changed-label
-        # count rides the checkpoint job as an Observation (a
-        # CollectMetrics sum — order-independent, exact). changed == 0
-        # means labels_i == labels_{i-1}; the round is a deterministic
-        # function of the labels, so labels_{i+k} = labels_i for all k —
-        # stopping here returns EXACTLY the CC_ITERS-round result the
-        # unrolled oracle computes (min-propagation is idempotent at its
-        # fixpoint). Near-dup clusters are shallow (diameter ~1-2), so
-        # this typically cuts the closure from 6 joins to 2 and skips the
-        # second checkpoint action outright — inside all 16 consumers.
-        if probe:
-            obs = Observation()
-            labels = (
-                labels.observe(
-                    obs,
-                    F.sum(
-                        (F.col("comp") != F.col("_prev")).cast("long")
-                    ).alias("chg"),
-                )
-                .select("doc_id", "comp")
-                .localCheckpoint()
-            )
-            if not obs.get["chg"]:  # 0 or None (empty graph): fixpoint
-                break
+
+    # Materializing every 2 rounds (and the last) keeps every plan ≤ 2
+    # joins deep at any graph scale; the label set is pair-graph-sized
+    # (≪ corpus), so that is cheap. changed == 0 (or None: empty graph) means
+    # labels_i == labels_{i-1}; the round is a deterministic function of
+    # the labels, so every later round is the identity and stopping returns
+    # EXACTLY the CC_ITERS-round result the unrolled oracle computes.
+    # Near-dup clusters are shallow (diameter ~1-2), so the closure
+    # typically stops at the first probe, inside all 16 consumers.
+    changed = F.sum((F.col("comp") != F.col("_prev")).cast("long"))
+    labels = iterate(
+        labels,
+        _round,
+        rounds=CC_ITERS,
+        every=2,
+        observe=[changed.alias("chg")],
+        stop=lambda _prev, cur: not cur.metrics["chg"],
+        what="dedup_components",
+    )
     return labels.select("doc_id", F.col("comp").alias("component"))
 
 
@@ -738,11 +723,11 @@ def star_components(spark: SparkSession, pairs: DataFrame) -> DataFrame:
     exactly the per-round plan shape of the propagation variant, so the
     cluster profile is identical; only the round count changes. Each round
     ``localCheckpoint``s (lineage stays flat). Convergence detection is
-    two-tier: a cheap aggregate signature probe (edge count + endpoint
-    checksums — a plan-parameterizing scalar fetch, not a data collect)
-    screens each round, and a signature match is then CONFIRMED by an
-    exact set-equality check before the loop exits, so a signature
-    collision can never silently return non-converged labels; exhausting
+    two-tier: an aggregate signature (edge count + endpoint checksums),
+    observed on each round's checkpoint job, screens each round, and a
+    signature match is then CONFIRMED by an exact set-equality check
+    before the loop exits, so a signature collision can never silently
+    return non-converged labels; exhausting
     ``STAR_MAX_ROUNDS`` without confirmed convergence raises rather than
     returning wrong components. Pure DataFrame ops keep it JVM-side end
     to end.
@@ -751,55 +736,40 @@ def star_components(spark: SparkSession, pairs: DataFrame) -> DataFrame:
     a component labeled with the component's minimum doc_id; isolated
     nodes (present in ``pairs`` only via self-reference) keep themselves.
     """
-    from pyspark.sql import Observation
+    # Signature terms are reduced mod a Mersenne prime BEFORE summing:
+    # the raw product u*v overflows int64 once doc_ids reach ~3e9-scale
+    # (caught by the 32x amplified scale probe under ANSI mode — remapped
+    # ids at +k*1e7 strides blew a plain sum(u*v) checksum), and a
+    # modular checksum is exactly as good for a probabilistic signature
+    # that the exact set-equality confirm backstops. Per-row values stay
+    # < P^2 < int64 max; the sum of %P terms stays < rows * 2^31. Sums of
+    # modular terms are order-independent integers, so observing them on
+    # each round's checkpoint job is exact.
+    _SIG_P = (1 << 31) - 1
+    sig_aggs = [
+        F.count(F.lit(1)).alias("n"),
+        F.sum((F.col("u") + F.col("v")) % _SIG_P).alias("s"),
+        F.sum(
+            ((F.col("u") % _SIG_P) * (F.col("v") % _SIG_P)) % _SIG_P
+        ).alias("p"),
+    ]
 
     # In-row symmetrization: single reference to the (possibly heavy,
-    # un-checkpointed) upstream pair plan — see dedup_components note.
-    edges = (
+    # un-checkpointed) upstream pair plan — see dedup_components note. The
+    # starting signature rides this checkpoint's job.
+    start = checkpoint(
         _symmetrize(pairs)
         .select(F.col("d1").alias("u"), F.col("d2").alias("v"))
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        sig_aggs,
     )
     # Lazy on purpose: ``nodes`` is only consumed by the final labeling
     # join, and its lineage is one distinct over the already-checkpointed
     # INITIAL edge set — re-deriving it inside the final job costs one
     # tiny shuffle there instead of a whole extra eager job here.
-    nodes = edges.select(F.col("u").alias("doc_id")).distinct()
+    nodes = start.state.select(F.col("u").alias("doc_id")).distinct()
 
-    # Signature terms are reduced mod a Mersenne prime BEFORE summing:
-    # the raw product u*v overflows int64 once doc_ids reach ~3e9-scale
-    # (caught by the 32x amplified scale probe under ANSI mode — remapped
-    # ids at +k*1e7 strides blew the old sum(u*v) checksum), and a
-    # modular checksum is exactly as good for a probabilistic signature
-    # that the exact set-equality confirm backstops. Per-row values stay
-    # < P^2 < int64 max; the sum of %P terms stays < rows * 2^31.
-    #
-    # The per-round signature rides the round's OWN checkpoint job via
-    # ``Observation`` (a CollectMetrics node over the rows the checkpoint
-    # materializes anyway) — the r12 form ran a separate aggregate job per
-    # round just to fetch these three scalars, doubling the action count
-    # of the whole loop.  Sums of modular terms are order-independent
-    # integers, so the observed values equal the old aggregate's exactly.
-    _SIG_P = (1 << 31) - 1
-
-    def _sig_aggs() -> list:
-        return [
-            F.count(F.lit(1)).alias("n"),
-            F.sum((F.col("u") + F.col("v")) % _SIG_P).alias("s"),
-            F.sum(
-                ((F.col("u") % _SIG_P) * (F.col("v") % _SIG_P)) % _SIG_P
-            ).alias("p"),
-        ]
-
-    def _probe(e: DataFrame) -> tuple:
-        row = e.agg(*_sig_aggs()).first()
-        return (row["n"], row["s"], row["p"])
-
-    sig = _probe(edges)
-    converged = False
-    for _round in range(STAR_MAX_ROUNDS):
-        prev = edges
+    def _round(edges: DataFrame, _probed: bool) -> DataFrame:
         # large-star: m(u) over the closed neighbourhood; larger neighbours
         # re-attach to m(u). Keeps (u, m) so u stays connected to its min.
         m = edges.groupBy("u").agg(
@@ -809,10 +779,9 @@ def star_components(spark: SparkSession, pairs: DataFrame) -> DataFrame:
         # Large-star output carries NO intermediate distinct: duplicate
         # directed edges are harmless downstream (small-star's min-agg is
         # dedup-insensitive, its join output is deduped at round end), so
-        # the round pays ONE distinct shuffle instead of the three the r7
-        # form paid (large-star dedup + small-star dedup + symmetry
-        # restore) — measured 4.19 → 3.58 s median at sf0.1, identical
-        # outputs at both SFs.
+        # the round pays ONE distinct shuffle, not one per star step plus
+        # one to restore symmetry (4.19 → 3.58 s median at sf0.1,
+        # identical outputs at both SFs).
         ls = (
             with_m.where(F.col("v") > F.col("u"))
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
@@ -831,10 +800,8 @@ def star_components(spark: SparkSession, pairs: DataFrame) -> DataFrame:
         # restore the symmetric invariant IN-ROW (explode both
         # orientations) so the single round-end distinct also closes the
         # symmetry — no second reference to a non-checkpointed frame, no
-        # extra shuffle.  The signature metrics are observed DURING the
-        # checkpoint materialization (one job per round total).
-        obs = Observation(f"star_sig_{_round}")
-        edges = (
+        # extra shuffle.
+        return (
             directed.select(
                 F.explode(
                     F.array(
@@ -847,38 +814,39 @@ def star_components(spark: SparkSession, pairs: DataFrame) -> DataFrame:
             )
             .select("e.u", "e.v")
             .distinct()
-            .observe(obs, *_sig_aggs())
-            .localCheckpoint()
         )
-        got = obs.get
-        new_sig = (got["n"], got["s"], got["p"])
-        if new_sig == sig:
-            # The signature is probabilistic — confirm a fixed point by an
-            # exact set-equality check so a collision can never smuggle out
-            # non-converged labels.  Both sides are distinct edge sets, so
-            # equality ⇔ the symmetric difference is empty: one union +
-            # one groupBy-sum over the two checkpointed sets (a single
-            # shuffle, paid once at convergence — the r7 version ran TWO
-            # exceptAll passes here, ~2× the scans for the same answer).
-            sym_diff = (
-                prev.withColumn("side", F.lit(1))
-                .unionByName(edges.withColumn("side", F.lit(-1)))
-                .groupBy("u", "v")
-                .agg(F.sum("side").alias("d"))
-                .where(F.col("d") != 0)
-            )
-            if sym_diff.isEmpty():
-                converged = True
-                break
-        sig = new_sig
-    if not converged:
-        raise RuntimeError(
-            f"star_components did not converge within {STAR_MAX_ROUNDS} "
-            "rounds — alternating-star needs O(log^2 n) rounds, so either "
-            "the graph is astronomically larger than designed for or the "
-            "rewiring steps regressed; refusing to return possibly-wrong "
-            "component labels"
+
+    def _fixpoint(prev: Probe, cur: Probe) -> bool:
+        if prev.metrics != cur.metrics:
+            return False
+        # The signature is probabilistic — confirm a fixed point by an
+        # exact set-equality check so a collision can never smuggle out
+        # non-converged labels.  Both sides are distinct edge sets, so
+        # equality ⇔ the symmetric difference is empty: one union + one
+        # groupBy-sum over the two checkpointed sets (a single shuffle,
+        # paid once at convergence; two exceptAll passes would scan twice).
+        sym_diff = (
+            prev.state.withColumn("side", F.lit(1))
+            .unionByName(cur.state.withColumn("side", F.lit(-1)))
+            .groupBy("u", "v")
+            .agg(F.sum("side").alias("d"))
+            .where(F.col("d") != 0)
         )
+        return sym_diff.isEmpty()
+
+    # Alternating-star needs O(log^2 n) rounds, so exhausting
+    # STAR_MAX_ROUNDS means either an astronomically larger graph than
+    # designed for or a regressed rewiring step: refuse to return
+    # possibly-wrong component labels.
+    edges = iterate(
+        start,
+        _round,
+        rounds=STAR_MAX_ROUNDS,
+        observe=sig_aggs,
+        stop=_fixpoint,
+        must_converge=True,
+        what="star_components",
+    )
     # converged: every node's min neighbour IS its component min (star
     # graph); nodes with no smaller neighbour are their own component root
     comp = edges.where(F.col("v") < F.col("u")).groupBy("u").agg(
@@ -2471,10 +2439,9 @@ def dedup_keep_best(
 
     docs = load_table(spark, sf_dir, "documents")
     if comp is None:
-        # Checkpointed (pair-graph-sized): the best branch and the
-        # output branch both read the closure, and without the
-        # checkpoint the whole propagation subplan doubles into both.
-        comp = dedup_components(spark, sf_dir).localCheckpoint()
+        # The best branch and the output branch both read the closure;
+        # it comes back checkpointed, so neither re-runs the rounds.
+        comp = dedup_components(spark, sf_dir)
     # Checkpointed for the same two-reader reason: without it the
     # regex-heavy quality scan evaluates twice (map-only branches have
     # no exchange to reuse). Two narrow columns per doc.

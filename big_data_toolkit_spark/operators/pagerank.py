@@ -15,9 +15,9 @@ Reference shapes replaced:
     - dangling (no out-edge) mass is redistributed to the SOURCE nodes only
       (``:140-155``), not uniformly;
     - the α teleport also lands only on sources, α/|S| each (``:329-337,415``).
-  Lineage is truncated with ``localCheckpoint`` every few iterations —
-  replacing the reference's per-iteration HDFS round-trip while keeping the
-  plan from growing unboundedly.
+  Lineage is truncated with ``localCheckpoint`` every few iterations by
+  ``plans/iterate.py`` — replacing the reference's per-iteration HDFS
+  round-trip while keeping the plan from growing unboundedly.
 * ``a4/FindMaxPageRankNodes.java:40-103`` (A12/O5): bounded-heap top-k →
   ``orderBy(desc).limit(k)`` (TakeOrderedAndProject — no global sort).
 * ``a4/PartitionGraph.java:103-130`` (U6): hash/range partitioning →
@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from big_data_toolkit_spark.catalog import load_table, local_table
+from big_data_toolkit_spark.plans.iterate import checkpoint, iterate
 
 ALPHA = 0.15  # a4/RunPersonalizedPageRankBasic.java:415
 DEFAULT_SOURCES = (0, 1, 2)
@@ -86,7 +87,7 @@ def personalized_pagerank(
     # wedges job at sf0.1).  Only install (and later release) the cache if
     # the CALLER had not already cached this plan — Spark's cache is keyed
     # by logical plan, so an unconditional unpersist() here would silently
-    # evict a caller's own cache of the identical edges frame (ADVICE r13).
+    # evict a caller's own cache of the identical edges frame.
     _edges_cache_installed = not edges.is_cached
     if _edges_cache_installed:
         edges = edges.cache()
@@ -169,7 +170,7 @@ def personalized_pagerank(
         F.when(is_source, F.lit(1.0 / n_sources)).otherwise(F.lit(0.0)).alias("rank"),
     )
 
-    for i in range(iters):
+    def _round(ranks: DataFrame, _probed: bool) -> DataFrame:
         # rank'(m) = Σ (1-α)·rank(n)·w(n→m)  ⊎  base(m) — messages pre-scaled
         # so the whole iteration is one union + ONE groupBy shuffle, instead
         # of contribs-groupBy + nodes-left-join (two shuffles + outer join).
@@ -177,18 +178,14 @@ def personalized_pagerank(
             F.col("dst").alias("node"),
             ((1.0 - alpha) * F.col("rank") * F.col("w")).alias("m"),
         )
-        ranks = (
-            msgs.unionByName(base).groupBy("node").agg(F.sum("m").alias("rank"))
-        )
-        # Truncate lineage periodically; otherwise the plan nests one join
-        # per iteration and analysis/codegen time blows up.
-        if (i + 1) % CHECKPOINT_EVERY == 0 and (i + 1) < iters:
-            ranks = ranks.localCheckpoint(eager=True)
+        return msgs.unionByName(base).groupBy("node").agg(F.sum("m").alias("rank"))
 
-    # Final lineage truncation lets the cached inputs go: without it the
-    # returned (lazy) plan still references wedges/base, and library callers
-    # would accrete executor storage with every invocation.
-    ranks = ranks.localCheckpoint(eager=True)
+    # The last round's checkpoint also lets the cached inputs go: without it
+    # the returned (lazy) plan still references wedges/base, and library
+    # callers would accrete executor storage with every invocation.
+    ranks = iterate(
+        ranks, _round, rounds=iters, every=CHECKPOINT_EVERY, what="pagerank"
+    )
     wedges.unpersist()
     base.unpersist()
     return ranks
@@ -431,14 +428,10 @@ def kcore_subgraph(
     """
     from big_data_toolkit_spark.operators.dedup import dedup_minhash_lsh
 
-    from pyspark.sql import Observation
-
     if pairs is None:
         pairs = dedup_minhash_lsh(spark, sf_dir)
-    edges = pairs.select("d1", "d2").localCheckpoint()
-    n_edges = edges.count()
-    converged = False
-    for _round in range(KCORE_MAX_ROUNDS):
+
+    def _peel(edges: DataFrame, _probed: bool) -> DataFrame:
         deg = (
             edges.select(F.col("d1").alias("node"))
             .union(edges.select(F.col("d2").alias("node")))
@@ -446,32 +439,25 @@ def kcore_subgraph(
             .agg(F.count("*").alias("deg"))
         )
         keep = deg.where(F.col("deg") >= KCORE_K).select("node")
-        # The convergence probe (edge count) rides the round's own
-        # checkpoint job as an Observation instead of a second count()
-        # action — one job per peel round instead of two (r13 optimization
-        # round; exact same integer, counted over the rows the checkpoint
-        # materializes anyway).
-        obs = Observation(f"kcore_n_{_round}")
-        edges = (
+        return (
             edges.join(keep.withColumnRenamed("node", "d1"), "d1")
             .join(keep.withColumnRenamed("node", "d2"), "d2")
             .select("d1", "d2")
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint()
         )
-        n_next = obs.get["n"]
-        if n_next == n_edges:
-            converged = True
-            break
-        n_edges = n_next
-    if not converged:
-        raise RuntimeError(
-            f"kcore_subgraph did not reach a fixpoint within "
-            f"{KCORE_MAX_ROUNDS} peel rounds — refusing to return an "
-            "unpeeled core (each round strictly shrinks the edge set, so "
-            "this many rounds means a pathologically deep peel hierarchy; "
-            "raise KCORE_MAX_ROUNDS and the oracle's unroll together)"
-        )
+
+    # The edge count rides each checkpoint job, the starting one included.
+    # Running out of rounds means a pathologically deep peel hierarchy:
+    # raise KCORE_MAX_ROUNDS and the oracle's unroll together.
+    count = [F.count(F.lit(1)).alias("n")]
+    edges = iterate(
+        checkpoint(pairs.select("d1", "d2"), count),
+        _peel,
+        rounds=KCORE_MAX_ROUNDS,
+        observe=count,
+        stop=lambda prev, cur: prev.metrics["n"] == cur.metrics["n"],
+        must_converge=True,
+        what="kcore_subgraph",
+    )
     return (
         edges.select(F.col("d1").alias("doc_id"))
         .union(edges.select(F.col("d2").alias("doc_id")))
@@ -573,7 +559,7 @@ def lpa_labels(
     ``label_propagation_communities``, factored out so property tests can
     drive it over arbitrary generated graphs against a pure-Python
     replica."""
-    # Stage the aggregated pair table ONCE before fanning out (r14): the
+    # Stage the aggregated pair table ONCE before fanning out: the
     # symmetrize union references `pairs` twice, the self-loop union a
     # third time (via the node distinct), and the label init a fourth —
     # with `pairs` lazy, the edges checkpoint plan embedded FOUR copies
@@ -614,52 +600,40 @@ def lpa_labels(
         .withColumn("community", F.col("node"))
         .localCheckpoint()
     )
-    from pyspark.sql import Observation
 
-    for i in range(rounds):
-        # Non-final checkpoint rounds also keep each node's OWN previous
-        # label (the single self-loop row is the src == dst join partner)
-        # and observe the changed-label count during the checkpoint job —
-        # the r14 dedup_components convergence pattern. changed == 0 means
-        # labels_i == labels_{i-1}; the synchronous vote is a
-        # deterministic function of the labels, so every later round is a
-        # no-op and stopping returns EXACTLY the fixed-round oracle
-        # result (the mode vote is idempotent at its fixpoint).
-        probe = i % 2 == 1 and i != rounds - 1
+    def _round(labels: DataFrame, probed: bool) -> DataFrame:
+        # Probed rounds also keep each node's OWN previous label (the
+        # single self-loop row is the src == dst join partner) for the
+        # changed-label count.
         aggs = [F.mode("community", True).alias("community")]
-        if probe:
-            aggs.append(
-                F.min(
-                    F.when(edges["src"] == edges["dst"], F.col("community"))
-                ).alias("_prev")
-            )
-        labels = (
+        if probed:
+            own = F.when(edges["src"] == edges["dst"], F.col("community"))
+            aggs.append(F.min(own).alias("_prev"))
+        return (
             edges.join(labels, edges["dst"] == labels["node"])
             .groupBy(edges["src"].alias("node"))
             .agg(*aggs)
         )
-        # Checkpoint every SECOND round (plus the last): the aggregation
-        # already leaves labels hash-partitioned on node, so a 2-round
-        # lazy chain still joins exchange-free; materializing half as
-        # often halves the loop's action count while keeping every plan
-        # ≤ 2 joins deep (the dedup_components cadence).
-        if probe:
-            obs = Observation()
-            labels = (
-                labels.observe(
-                    obs,
-                    F.sum(
-                        (F.col("community") != F.col("_prev")).cast("long")
-                    ).alias("chg"),
-                )
-                .select("node", "community")
-                .localCheckpoint()
-            )
-            if not obs.get["chg"]:  # 0 or None (empty graph): fixpoint
-                break
-        elif i % 2 == 1 or i == rounds - 1:
-            labels = labels.localCheckpoint()
-    return labels
+
+    # Materialize every SECOND round (plus the last): the aggregation
+    # already leaves labels hash-partitioned on node, so a 2-round lazy
+    # chain still joins exchange-free; materializing half as often halves
+    # the loop's action count while keeping every plan ≤ 2 joins deep (the
+    # dedup_components cadence). changed == 0 (or None: empty graph)
+    # means labels_i == labels_{i-1}; the synchronous vote is a
+    # deterministic function of the labels, so every later round is a no-op
+    # and stopping returns EXACTLY the fixed-round oracle result (the mode
+    # vote is idempotent at its fixpoint).
+    changed = F.sum((F.col("community") != F.col("_prev")).cast("long"))
+    return iterate(
+        labels,
+        _round,
+        rounds=rounds,
+        every=2,
+        observe=[changed.alias("chg")],
+        stop=lambda _prev, cur: not cur.metrics["chg"],
+        what="lpa_labels",
+    )
 
 
 def _lpa_oracle_sql(rounds: int = LPA_ROUNDS) -> str:

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from big_data_toolkit_spark.catalog import load_table
 from big_data_toolkit_spark.functions.text import DUCKDB_TOKENS, tokenize
+from big_data_toolkit_spark.plans.iterate import iterate
 
 LEARN_RATE = 0.002  # a5/TrainSpamClassifier.scala:55
 N_SPLITS = 3  # ensemble arity, a5/ApplyEnsembleSpamClassifier.scala:61-63
@@ -276,7 +277,8 @@ def batch_gd_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()
     )
     inv_tick = 1.0 / GD_TICK
-    for _it in range(GD_ITERS):
+
+    def _step(w: DataFrame, _probed: bool) -> DataFrame:
         scores = (
             feats.join(w, "feature", "left")
             .groupBy("doc_id", "y")
@@ -301,7 +303,7 @@ def batch_gd_train(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("feature")
             .agg(F.sum("rt").alias("gt"))
         )
-        w = grad.join(w, "feature", "left").select(
+        return grad.join(w, "feature", "left").select(
             "feature",
             (
                 F.coalesce(F.col("w_ticks"), F.lit(0))
@@ -310,23 +312,22 @@ def batch_gd_train(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("w_ticks"),
         )
-        # Materialize the vocab-sized weight table EVERY iteration (r14,
-        # ADVICE r13): unlike the closure/LPA label tables — referenced
-        # once per round — a lazy ``w`` is referenced TWICE by the next
-        # iteration (the scores join and the grad-update join), and the
-        # captured plan shows the duplicated corpus-sized gradient
-        # subtree with NO static ReusedExchange (10 RDD scan operators in
-        # the 2-step chain vs 4 for one step); avoiding the double execution
-        # relied on runtime reuse this repo's own dedup notes call
-        # unreliable across differently-shaped branches. The two
-        # cadences measured a wash at sf0.1 (train 2.244 vs 2.236 s,
-        # score 2.484 vs 2.349 — 5-trial medians), so the per-iteration
-        # checkpoint is kept: the extra action is vocab-sized-cheap and
-        # the at-scale risk (a corpus-sized gradient step running twice)
-        # is gone by construction. Values are exact integer ticks, so
-        # the cadence changes nothing downstream either way.
-        w = w.localCheckpoint()
-    return w
+
+    # Materialize the vocab-sized weight table EVERY iteration: unlike the
+    # closure/LPA label tables — referenced once per round — a lazy ``w``
+    # is referenced TWICE by the next iteration (the scores join and the
+    # grad-update join), and the captured plan shows the duplicated
+    # corpus-sized gradient subtree with NO static ReusedExchange (10 RDD
+    # scan operators in the 2-step chain vs 4 for one step); avoiding the
+    # double execution would rely on runtime reuse this repo's own dedup
+    # notes call unreliable across differently-shaped branches. The two
+    # cadences measured a wash at sf0.1 (train 2.244 vs 2.236 s, score
+    # 2.484 vs 2.349 — 5-trial medians), so the per-iteration checkpoint
+    # is kept: the extra action is vocab-sized-cheap and the at-scale risk
+    # (a corpus-sized gradient step running twice) is gone by
+    # construction. Values are exact integer ticks, so the cadence changes
+    # nothing downstream either way.
+    return iterate(w, _step, rounds=GD_ITERS, what="batch_gd_train")
 
 
 def batch_gd_score(spark: SparkSession, sf_dir: str) -> DataFrame:

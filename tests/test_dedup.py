@@ -177,7 +177,7 @@ def _min_prop_rounds(pairs: list, rounds: int) -> dict:
 
 
 def test_components_early_exit_equals_fixed_rounds(spark):
-    """r14 convergence early-exit: the Observation-gated break must return
+    """Convergence early exit: the observed stop must return
     EXACTLY the fixed CC_ITERS-round result in both regimes — a star graph
     that converges in round 0 (the exit fires at the first probe) and a
     long path whose diameter exceeds CC_ITERS (the exit must NOT fire
@@ -295,6 +295,22 @@ def test_star_components_raises_on_round_exhaustion(spark, monkeypatch):
     pairs = spark.createDataFrame([(1, 2), (2, 3)], ["d1", "d2"])
     with _pytest.raises(RuntimeError, match="did not converge"):
         dedup.star_components(spark, pairs).collect()
+
+
+def test_kcore_raises_on_round_exhaustion(spark, monkeypatch):
+    """A triangle with the path 3-4-5-6 hanging off it peels one path node
+    per round and needs a fourth round to see the edge count hold, so two
+    rounds must raise rather than return an unpeeled core."""
+    import pytest as _pytest
+
+    from big_data_toolkit_spark.operators import pagerank as pr
+
+    monkeypatch.setattr(pr, "KCORE_MAX_ROUNDS", 2)
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (5, 6)], ["d1", "d2"]
+    )
+    with _pytest.raises(RuntimeError, match="did not converge"):
+        pr.kcore_subgraph(spark, "", pairs=pairs)
 
 
 def test_span_dedup_drops_repeats(spark):

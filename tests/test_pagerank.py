@@ -141,36 +141,11 @@ def test_kcore_peels_tendrils_keeps_triangle(spark):
     """Ground truth on a hand-built graph: a triangle with a 3-node path
     hanging off it. The path (degrees 1) peels away transitively; the
     triangle survives with every core degree exactly 2."""
-    from pyspark.sql import functions as F
-
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (5, 6)], ["d1", "d2"]
     )
-    # drive the loop body directly via a monkeypatched pair source
-    edges = pairs.localCheckpoint()
-    n_edges = edges.count()
-    for _ in range(pr.KCORE_MAX_ROUNDS):
-        deg = (
-            edges.select(F.col("d1").alias("node"))
-            .union(edges.select(F.col("d2").alias("node")))
-            .groupBy("node")
-            .agg(F.count("*").alias("deg"))
-        )
-        keep = deg.where(F.col("deg") >= pr.KCORE_K).select("node")
-        edges = (
-            edges.join(keep.withColumnRenamed("node", "d1"), "d1")
-            .join(keep.withColumnRenamed("node", "d2"), "d2")
-            .select("d1", "d2")
-            .localCheckpoint()
-        )
-        n_next = edges.count()
-        if n_next == n_edges:
-            break
-        n_edges = n_next
-    got = {
-        (r["d1"], r["d2"]) for r in edges.collect()
-    }
-    assert got == {(1, 2), (2, 3), (1, 3)}
+    core = pr.kcore_subgraph(spark, "", pairs=pairs).collect()
+    assert {r["doc_id"]: r["core_deg"] for r in core} == {1: 2, 2: 2, 3: 2}
 
 
 def test_kcore_subgraph_invariants(spark):
