@@ -1108,12 +1108,6 @@ def _pq_query_qv(
     return [int(x) for x in qrows[0]["qv"]]
 
 
-def _pq_lut(
-    spark: SparkSession, sf_dir: str, donors: dict[int, list[int]], query_vec_id: int
-) -> list[list[int]]:
-    return _pq_lut_from_qv(donors, _pq_query_qv(spark, sf_dir, query_vec_id))
-
-
 def knn_pq(
     spark: SparkSession, sf_dir: str, query_vec_id: int = QUERY_VEC_ID, k: int = TOP_K
 ) -> DataFrame:
@@ -1132,7 +1126,7 @@ def knn_pq(
     end to end, so the DuckDB oracle hash-matches.
     """
     donors = _pq_codebook(spark, sf_dir)
-    lut = _pq_lut(spark, sf_dir, donors, query_vec_id)
+    lut = _pq_lut_from_qv(donors, _pq_query_qv(spark, sf_dir, query_vec_id))
     q = _quantize(load_table(spark, sf_dir, "embeddings"))
     coded = _with_pq_idx(q.where(F.col("vec_id") != query_vec_id), donors)
     adc = F.lit(0).cast("long")
@@ -1189,17 +1183,21 @@ def knn_pq_from_codes(
     donors: dict[int, list[int]],
     query_vec_id: int = QUERY_VEC_ID,
     k: int = TOP_K,
+    qv: list[int] | None = None,
 ) -> DataFrame:
     """(vec_id, adc_dist2): ``knn_pq`` over a PERSISTED code table — the
     production shape where the ANN scan reads 8 bytes/vector from the
     stored index instead of re-encoding the corpus in-plan. The only
     embeddings access is the query vector's point lookup (the codebook
-    comes stored alongside the codes); the ADC is the same 8-lookup sum,
+    comes stored alongside the codes), skipped when the caller already
+    fetched it as ``qv``; the ADC is the same 8-lookup sum,
     here ``element_at`` into per-subspace donor-id→distance map literals
     (128 entries, index constants). Bit-exact vs the in-plan twin —
     equality-tested in tests/test_materialize.py."""
     dids = sorted(donors)
-    lut = _pq_lut(spark, sf_dir, donors, query_vec_id)
+    if qv is None:
+        qv = _pq_query_qv(spark, sf_dir, query_vec_id)
+    lut = _pq_lut_from_qv(donors, qv)
     did_keys = F.array(*[F.lit(j).cast("int") for j in dids])
     adc = F.lit(0).cast("long")
     for s in range(PQ_SUBSPACES):
@@ -1330,8 +1328,8 @@ def pq_lut_cols(donors: dict[int, list[int]]) -> list[Column]:
     """Per-subspace in-row ADC lookup arrays ``_lut_s`` for a QUERY-side
     row: entry j = exact integer distance from the row's subvector s to
     donor dids[j]'s subvector — the per-arriving-vector form of the
-    driver-side ``_pq_lut`` (a stream can't collect per-row LUTs to the
-    driver, so the 8×16 folds run in-row instead)."""
+    driver-side ``_pq_lut_from_qv`` (a stream can't collect per-row LUTs
+    to the driver, so the 8×16 folds run in-row instead)."""
     dids = sorted(donors)
     return [
         F.array(

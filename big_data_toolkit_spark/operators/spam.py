@@ -48,16 +48,6 @@ def _doc_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def df_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Integer 'model': feature → document frequency (used as its weight)."""
-    return (
-        _doc_features(spark, sf_dir)
-        .select(F.explode("features").alias("feature"))
-        .groupBy("feature")
-        .agg(F.count("*").alias("weight"))
-    )
-
-
 def spam_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Score every doc with the df-weight model; label above global mean.
 

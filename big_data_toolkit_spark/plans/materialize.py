@@ -201,19 +201,27 @@ def read_semantic_centroids(
     exactly like the in-plan op."""
     sem_path = os.path.join(workdir, SEM_CENTROIDS_DIR)
     if os.path.isdir(sem_path):
-        rows = spark.read.parquet(sem_path).collect()
         return {
             int(r["cluster"]): [float(x) for x in r["centroid"]]
-            for r in rows
+            for r in _read_driver_table(sem_path)
         }
     return read_centroids(spark, workdir)
+
+
+def _read_driver_table(path: str) -> list[dict]:
+    """Rows of a K-row table the driver wrote with pyarrow, read back with
+    pyarrow: ``spark.read.parquet(...).collect()`` would run two Spark jobs
+    (footer inference, then the collect) for data the driver already had."""
+    import pyarrow.parquet as pq
+
+    return pq.read_table(path).to_pylist()
 
 
 def read_centroids(spark: SparkSession, workdir: str) -> dict[int, list[float]]:
     """Load the K-row centroid table back into the literal dict the
     assignment expressions are parameterized with (O(K·dim) driver bytes —
     the same budget as the in-plan training fetch)."""
-    rows = spark.read.parquet(os.path.join(workdir, CENTROIDS_DIR)).collect()
+    rows = _read_driver_table(os.path.join(workdir, CENTROIDS_DIR))
     if not rows:
         raise ValueError(
             f"read_centroids: no centroid rows under {workdir}/{CENTROIDS_DIR}"
@@ -592,10 +600,8 @@ def compact_pq_artifact(spark: SparkSession, sf_dir: str, workdir: str) -> None:
     ).partitionBy("cell").parquet(os.path.join(workdir, PQ_CODES_DIR))
 
 
-def _read_id_vec_table(
-    spark: SparkSession, workdir: str, subdir: str
-) -> dict[int, list[int]]:
-    rows = spark.read.parquet(os.path.join(workdir, subdir)).collect()
+def _read_id_vec_table(workdir: str, subdir: str) -> dict[int, list[int]]:
+    rows = _read_driver_table(os.path.join(workdir, subdir))
     if not rows:
         raise ValueError(
             f"no rows under {workdir}/{subdir} — PQ artifact build did "
@@ -605,11 +611,11 @@ def _read_id_vec_table(
 
 
 def read_pq_codebook(spark: SparkSession, workdir: str) -> dict[int, list[int]]:
-    return _read_id_vec_table(spark, workdir, PQ_CODEBOOK_DIR)
+    return _read_id_vec_table(workdir, PQ_CODEBOOK_DIR)
 
 
 def read_pq_centroids(spark: SparkSession, workdir: str) -> dict[int, list[int]]:
-    return _read_id_vec_table(spark, workdir, PQ_CENTROIDS_DIR)
+    return _read_id_vec_table(workdir, PQ_CENTROIDS_DIR)
 
 
 def knn_pq_materialized(
@@ -666,11 +672,8 @@ def knn_ivfpq_materialized(
     pruned = read_pq_codes(spark, workdir).where(
         F.col("cell").isin([int(c) for c in probe])
     )
-    # knn_pq_from_codes derives its ADC LUT from one more point lookup of
-    # the same query vector — cheap, and keeps the ADC machinery single-
-    # sourced rather than duplicated here
     return knn_pq_from_codes(
-        spark, sf_dir, pruned, donors, query_vec_id, k
+        spark, sf_dir, pruned, donors, query_vec_id, k, qv=qv
     )
 
 

@@ -107,6 +107,18 @@ def spark():
     spark.stop()
 
 
+def count_jobs(spark, group, fn):
+    """Run ``fn`` under a fresh job group; return its result and job count."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @contextlib.contextmanager
 def rocksdb_state_store(spark):
     """transformWithState requires a state store with multiple column

@@ -13,20 +13,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from big_data_toolkit_spark.plans.iterate import checkpoint, iterate
+from tests.conftest import count_jobs
 
 PACKAGE = pathlib.Path(__file__).resolve().parent.parent / "big_data_toolkit_spark"
-
-
-def _jobs(spark, group, fn):
-    """Run ``fn`` under a fresh job group; return its result and job count."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _countdown(probes):
@@ -49,7 +38,7 @@ def _changed():
 def test_cadence_materializes_every_nth_and_last_round(spark):
     probes = []
     start = spark.range(4).select("id", F.col("id").alias("v"))
-    out, jobs = _jobs(
+    out, jobs = count_jobs(
         spark,
         "iterate-cadence",
         lambda: iterate(
@@ -68,7 +57,7 @@ def test_stop_fires_on_first_observed_fixpoint(spark):
     for every, probed in ((1, [True] * 4), (2, [False, True, False, True])):
         probes = []
         start = spark.range(4).select("id", F.col("id").alias("v"))
-        out, jobs = _jobs(
+        out, jobs = count_jobs(
             spark,
             f"iterate-stop-{every}",
             lambda: iterate(
@@ -98,7 +87,7 @@ def test_checkpointed_start_is_the_first_baseline(spark):
         seen.append((prev.metrics["n"], cur.metrics["n"]))
         return prev.metrics["n"] == cur.metrics["n"]
 
-    _, jobs = _jobs(
+    _, jobs = count_jobs(
         spark,
         "iterate-start",
         lambda: iterate(

@@ -7,7 +7,7 @@ import pytest
 
 from big_data_toolkit_spark.operators import dedup, pagerank, similarity
 from big_data_toolkit_spark.plans import materialize
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, count_jobs
 
 
 @pytest.fixture(scope="module")
@@ -38,6 +38,25 @@ def test_centroids_artifact_roundtrip_exact(spark, workdir):
     # parquet DOUBLE round-trips bit-exactly: the stored centroids ARE the
     # trained ones, so downstream assignments cannot drift.
     assert stored == trained
+
+
+def test_driver_written_tables_read_without_spark_jobs(
+    spark, workdir, pq_workdir
+):
+    """The centroid, codebook and quantizer tables are the driver's own
+    pyarrow writes: reading them back runs no Spark job."""
+    tables, jobs = count_jobs(
+        spark,
+        "read-driver-tables",
+        lambda: (
+            materialize.read_centroids(spark, workdir),
+            materialize.read_semantic_centroids(spark, workdir),
+            materialize.read_pq_codebook(spark, pq_workdir),
+            materialize.read_pq_centroids(spark, pq_workdir),
+        ),
+    )
+    assert jobs == 0
+    assert all(tables)
 
 
 def test_triangle_count_materialized_equals_inplan(spark, workdir):
@@ -184,6 +203,23 @@ def test_knn_ivfpq_materialized_equals_inplan_and_prunes(spark, pq_workdir):
     assert _rows(full) == _rows(
         materialize.knn_pq_materialized(spark, SF_SMOKE, pq_workdir)
     )
+
+
+def test_knn_ivfpq_materialized_looks_up_the_query_once(
+    spark, pq_workdir, monkeypatch
+):
+    """The probed cells and the ADC table come from one fetch of the query
+    vector."""
+    calls = []
+    lookup = similarity._pq_query_qv
+
+    def counted(*args):
+        calls.append(args)
+        return lookup(*args)
+
+    monkeypatch.setattr(similarity, "_pq_query_qv", counted)
+    materialize.knn_ivfpq_materialized(spark, SF_SMOKE, pq_workdir)
+    assert len(calls) == 1
 
 
 def test_ann_pq_incremental_materialized_equals_inplan(spark, pq_workdir):

@@ -4,16 +4,21 @@ The Python daemon's ``sys.path`` rewrite (``spark_worker_daemon``): a
 Spark-free check of the rewrite itself, and a check from inside a worker
 that pyspark comes from ``$SPARK_HOME/python``. The shuffle and state
 partitions: sized from the session's cores, and pinned per checkpoint for a
-stream started before that sizing."""
+stream started before that sizing. The checkpoint manager: the FileSystem
+one on a local master, Spark's default on any other, still refusing to
+overwrite, and able to resume a checkpoint the default one started."""
 
 from __future__ import annotations
 
 import json
 import os
+from types import SimpleNamespace
 
 import pytest
+from py4j.protocol import Py4JJavaError
 
 import spark_worker_daemon
+from big_data_toolkit_spark import session
 from big_data_toolkit_spark.catalog import load_table
 from big_data_toolkit_spark.streaming import trending, windows
 from tests.conftest import SF_SMOKE
@@ -179,6 +184,14 @@ def _final_trend_rows(spark, out):
     }
 
 
+def _batch_trend_rows(spark):
+    """``_final_trend_rows``'s shape from the batch twin."""
+    return {
+        (r["event_type"], r["window_start"], r["cnt"], r["prev_cnt"], r["trending"])
+        for r in windows.trending_events(spark, SF_SMOKE).collect()
+    }
+
+
 def test_shuffle_and_state_partitions_are_twice_the_local_cores(
     spark, tmp_path
 ):
@@ -220,9 +233,84 @@ def test_checkpoint_keeps_the_partition_count_it_started_with(
 
     assert [p["batchId"] for p in second] == [1]
     assert second[-1]["stateOperators"][0]["numShufflePartitions"] == 32
-    got = _final_trend_rows(spark, out)
-    expected = {
-        (r["event_type"], r["window_start"], r["cnt"], r["prev_cnt"], r["trending"])
-        for r in windows.trending_events(spark, SF_SMOKE).collect()
-    }
-    assert got == expected
+    assert _final_trend_rows(spark, out) == _batch_trend_rows(spark)
+
+
+_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+_FILE_CONTEXT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileContextBasedCheckpointFileManager"
+)
+
+
+def _checkpoint_manager(spark, path):
+    """The manager Spark's streaming layer creates for ``path`` under the
+    session's current conf."""
+    jvm = spark._jvm
+    return jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(path),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+
+
+def test_local_session_checkpoints_through_the_filesystem_manager(
+    spark, tmp_path
+):
+    assert spark.conf.get(_MANAGER_KEY) == session._LOCAL_CHECKPOINT_MANAGER
+    manager = _checkpoint_manager(spark, str(tmp_path))
+    assert manager.getClass().getName() == session._LOCAL_CHECKPOINT_MANAGER
+
+
+@pytest.mark.parametrize(
+    "master, extra, expected",
+    [
+        ("local[4]", None, session._LOCAL_CHECKPOINT_MANAGER),
+        ("local", None, session._LOCAL_CHECKPOINT_MANAGER),
+        ("spark://h:7077", None, None),
+        ("local[4]", {_MANAGER_KEY: _FILE_CONTEXT_MANAGER}, None),
+    ],
+    ids=["local-n", "local", "standalone", "extra-conf-wins"],
+)
+def test_checkpoint_manager_set_only_on_a_local_master(master, extra, expected):
+    """Any other master keeps Spark's default, and ``extra_conf`` wins (its
+    value reaches the session through the builder, so nothing is set
+    after ``getOrCreate``)."""
+    sc = SimpleNamespace(master=master, defaultParallelism=4)
+    assert session._session_conf(sc, extra).get(_MANAGER_KEY) == expected
+
+
+def test_checkpoint_manager_refuses_to_overwrite(spark, tmp_path):
+    manager = _checkpoint_manager(spark, str(tmp_path))
+    target = spark._jvm.org.apache.hadoop.fs.Path(str(tmp_path / "0"))
+    first = manager.createAtomic(target, False)
+    first.write(1)
+    first.close()
+
+    again = manager.createAtomic(target, False)
+    again.write(2)
+    with pytest.raises(Py4JJavaError, match="FileAlreadyExists|already exists"):
+        again.close()
+    assert (tmp_path / "0").read_bytes() == bytes([1])
+
+
+def test_checkpoint_from_the_default_manager_resumes(spark, tmp_path):
+    """Half the events checkpointed under Spark's FileContext manager, the
+    rest after a restart on the engine's: the state carries over and the
+    final rows are the batch answer."""
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    schema, write = _event_half_writer(spark, src)
+    write(0)
+    spark.conf.unset(_MANAGER_KEY)
+    try:
+        manager = _checkpoint_manager(spark, str(tmp_path))
+        assert manager.getClass().getName() == _FILE_CONTEXT_MANAGER
+        first = _replay_trending(spark, schema, src, out)
+    finally:
+        spark.conf.set(_MANAGER_KEY, session._LOCAL_CHECKPOINT_MANAGER)
+    assert [p["batchId"] for p in first] == [0]
+
+    write(1)
+    second = _replay_trending(spark, schema, src, out)
+
+    assert [p["batchId"] for p in second] == [1]
+    assert _final_trend_rows(spark, out) == _batch_trend_rows(spark)
