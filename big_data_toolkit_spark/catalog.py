@@ -12,13 +12,26 @@ Scale note: ``spark.read.parquet`` on a directory of files partitions by
 row-group/128 MB splits automatically; at 100 TB the same call distributes the
 scan across the cluster, and filters/projections written against these views
 reach the parquet reader (PushedFilters / ReadSchema in ``.explain``).
+
+Table metadata without Spark jobs: every parquet read in the package goes
+through ``read_parquet``, which keeps the schema Spark inferred for a path
+and hands it back with ``spark.read.schema(...)`` while the path's data
+files are unchanged, so a warm read runs no inference job; row counts come
+from the parquet footers (``parquet_row_count``). This is the metadata a
+table catalog serves at cluster scale. ``build_artifacts`` and
+``manifest_compact`` read tables from two threads at once; the shared
+schema cache is safe there because a lookup is an atomic dict get, the
+bounded store's evict-then-set holds a lock, and the worst a race costs is
+both threads inferring the same schema and storing equal values.
 """
 
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -40,7 +53,26 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-def table_row_count(sf_dir: str, name: str) -> int:
+def _hidden(name: str) -> bool:
+    """Spark's rule for the paths a file source skips: ``_SUCCESS``,
+    ``.crc`` checksums and other ``_``/``.`` names, but not partition
+    directories such as ``_c=1``."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def _data_files(path: str) -> list[str]:
+    """The files Spark reads for a parquet path: the path itself, or every
+    non-hidden file under it (partition directories included), sorted."""
+    if not os.path.isdir(path):
+        return [path]
+    out = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not _hidden(d))
+        out.extend(os.path.join(root, f) for f in sorted(files) if not _hidden(f))
+    return out
+
+
+def parquet_row_count(path: str) -> int:
     """Row count from the parquet FOOTERS, driver-side — no Spark job.
 
     The statistics lookup a table catalog (metastore/Delta/Iceberg)
@@ -48,20 +80,75 @@ def table_row_count(sf_dir: str, name: str) -> int:
     footer, so the count costs one metadata read per file regardless of
     table bytes. Used where an operator needs only a sizing bound (e.g.
     the Bloom bitmap's m), where launching even a no-column count job
-    would dominate the operator's own work."""
+    would dominate the operator's own work, and for the artifact
+    summaries, where ``read_parquet(...).count()`` would run three (the
+    schema inference, then the count's two under AQE)."""
     import pyarrow.parquet as pq
 
-    path = table_path(sf_dir, name)
-    if os.path.isdir(path):
-        files = [
-            os.path.join(root, f)
-            for root, _, fs in os.walk(path)
-            for f in fs
-            if f.endswith(".parquet")
-        ]
-    else:
-        files = [path]
-    return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
+    return sum(pq.ParquetFile(f).metadata.num_rows for f in _data_files(path))
+
+
+def table_row_count(sf_dir: str, name: str) -> int:
+    """``parquet_row_count`` of one TESTDATA table."""
+    return parquet_row_count(table_path(sf_dir, name))
+
+
+# Session confs that change the schema parquet inference returns; a cached
+# schema is only reused under the values it was inferred with.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+# Every artifact build writes a fresh directory, so the cache is emptied
+# when it reaches this many paths rather than growing with the passes.
+_SCHEMA_CACHE_MAX = 256
+# (absolute path, _SCHEMA_CONFS values) -> (data-file stamp, schema).
+# Holds plain-Python StructTypes only, never a session or a JVM object.
+# Lookups take no lock (see the module docstring); the store's
+# evict-then-set is a check-then-act, so it holds _SCHEMAS_LOCK.
+_SCHEMAS: dict[tuple, tuple[tuple, StructType]] = {}
+_SCHEMAS_LOCK = threading.Lock()
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without the schema-inference job when
+    the path's data files are unchanged since the last read.
+
+    Spark infers a parquet schema by running a job that reads the
+    footers, on every read. The inferred ``StructType`` is kept per path
+    and per inference conf, stamped with each data file's relative name,
+    size and ``st_mtime_ns``; while that stamp holds, the read passes the
+    schema back through ``spark.read.schema`` and Spark only lists the
+    files. A rewritten,
+    added or removed file changes the stamp and the next read infers
+    again. Paths ``os.stat`` cannot see (missing, ``hdfs://``, ``s3a://``)
+    go straight to ``spark.read.parquet``, so they raise exactly what it
+    raises. Safe to call from several threads (see ``_SCHEMAS``)."""
+    try:
+        stamp = tuple(
+            (os.path.relpath(f, path), st.st_size, st.st_mtime_ns)
+            for f in _data_files(path)
+            for st in (os.stat(f),)
+        )
+    except OSError:
+        return spark.read.parquet(path)
+    key = (os.path.abspath(path),) + tuple(
+        spark.conf.get(k, None) for k in _SCHEMA_CONFS
+    )
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    entry = (stamp, df.schema)
+    with _SCHEMAS_LOCK:
+        if len(_SCHEMAS) >= _SCHEMA_CACHE_MAX:
+            _SCHEMAS.clear()
+        _SCHEMAS[key] = entry
+    return df
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -98,11 +185,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             )
         # Scope the legacy nanos escape hatch to this read: a later parquet
         # read of a nanos column elsewhere should fail fast, not silently
-        # yield raw longs.
+        # yield raw longs. The conf is part of read_parquet's cache key, so
+        # a schema inferred under it is only reused under it.
         prior = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         try:
-            df = spark.read.parquet(table_path(sf_dir, name))
+            df = read_parquet(spark, table_path(sf_dir, name))
             ts_type = df.schema["ts"].dataType
             if isinstance(ts_type, T.LongType):
                 # nanos fixture: integer `div` — double division would lose
@@ -132,7 +220,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
             else:
                 spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prior)
-    return spark.read.parquet(table_path(sf_dir, name))
+    return read_parquet(spark, table_path(sf_dir, name))
 
 
 def local_table(spark: SparkSession, rows: list, ddl: str) -> DataFrame:

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from big_data_toolkit_spark.catalog import load_table
+from big_data_toolkit_spark.catalog import load_table, read_parquet
 from big_data_toolkit_spark.functions.text import DUCKDB_TOKENS, tokenize
 
 # Test-bench retrieval queries (postfix, reference a3 query format).
@@ -171,7 +171,7 @@ def write_index(spark: SparkSession, sf_dir: str, out_path: str) -> None:
 
 def lookup_term(spark: SparkSession, index_path: str, term: str) -> DataFrame:
     """Point lookup against a written index (S7: MapFile.get equivalent)."""
-    return spark.read.parquet(index_path).where(F.col("term") == F.lit(term))
+    return read_parquet(spark, index_path).where(F.col("term") == F.lit(term))
 
 
 def boolean_retrieval(spark: SparkSession, sf_dir: str, query: str) -> DataFrame:

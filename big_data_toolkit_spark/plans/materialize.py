@@ -36,7 +36,11 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from big_data_toolkit_spark.catalog import local_table
+from big_data_toolkit_spark.catalog import (
+    local_table,
+    parquet_row_count,
+    read_parquet,
+)
 from big_data_toolkit_spark.sources.writers import write_sorted_bucketed
 
 PAIRS_DIR = "neardup_pairs"
@@ -85,7 +89,7 @@ def build_artifacts(spark: SparkSession, sf_dir: str, workdir: str) -> dict[str,
         # path).
         write_sorted_bucketed(
             dedup_components(
-                spark, sf_dir, pairs=spark.read.parquet(pairs_path)
+                spark, sf_dir, pairs=read_parquet(spark, pairs_path)
             ),
             comps_path,
             "doc_id",
@@ -117,7 +121,10 @@ def build_artifacts(spark: SparkSession, sf_dir: str, workdir: str) -> dict[str,
     # thread-safe — neither chain reads `events` today, and any future
     # artifact that does must either run outside this pool or move that
     # read to a per-read option. Session confs are process-global; job
-    # descriptions are the only thread-local state relied on here.
+    # descriptions are the only thread-local state relied on here. The
+    # parquet schema cache both chains read through (`catalog.read_parquet`)
+    # is safe to share: its lookups are atomic dict gets, its bounded store
+    # takes a lock, and at worst both threads infer the same schema.
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=2) as pool:
@@ -184,11 +191,11 @@ def _write_semantic_centroids(
 
 
 def read_neardup_pairs(spark: SparkSession, workdir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(workdir, PAIRS_DIR))
+    return read_parquet(spark, os.path.join(workdir, PAIRS_DIR))
 
 
 def read_neardup_components(spark: SparkSession, workdir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(workdir, COMPONENTS_DIR))
+    return read_parquet(spark, os.path.join(workdir, COMPONENTS_DIR))
 
 
 def read_semantic_centroids(
@@ -379,13 +386,13 @@ def _bench_workdir(spark: SparkSession, sf_dir: str) -> str:
 
 def bench_artifact_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bench line for the build alone: ONE pair-graph pass + ONE centroid
-    training, persisted. Returns the artifact row counts (forcing this tiny
-    summary re-reads only the written parquet, not the build)."""
+    training, persisted. Returns the artifact row counts, read from the
+    written files' parquet footers (no Spark job)."""
     _BENCH_WORKDIRS.pop(sf_dir, None)  # always time a FRESH build
     workdir = _bench_workdir(spark, sf_dir)
-    pairs_n = read_neardup_pairs(spark, workdir).count()
+    pairs_n = parquet_row_count(os.path.join(workdir, PAIRS_DIR))
     cents_n = len(read_centroids(spark, workdir))
-    comps_n = read_neardup_components(spark, workdir).count()
+    comps_n = parquet_row_count(os.path.join(workdir, COMPONENTS_DIR))
     return local_table(
         spark,
         [
@@ -545,7 +552,7 @@ def build_pq_artifact(
 
 
 def read_pq_codes(spark: SparkSession, workdir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(workdir, PQ_CODES_DIR))
+    return read_parquet(spark, os.path.join(workdir, PQ_CODES_DIR))
 
 
 def compact_pq_artifact(spark: SparkSession, sf_dir: str, workdir: str) -> None:
@@ -744,14 +751,15 @@ def _pq_bench_workdir(spark: SparkSession, sf_dir: str) -> str:
 
 def bench_pq_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bench line for the PQ index build alone: one encode scan + the
-    codebook write. Returns artifact row counts (re-reads only the
-    written parquet)."""
+    codebook write. Returns artifact row counts, read from the written
+    files' parquet footers (no Spark job)."""
     _PQ_BENCH_WORKDIRS.pop(sf_dir, None)  # always time a FRESH build
     workdir = _pq_bench_workdir(spark, sf_dir)
+    codes_n = parquet_row_count(os.path.join(workdir, PQ_CODES_DIR))
     return local_table(
         spark,
         [
-            (PQ_CODES_DIR, read_pq_codes(spark, workdir).count()),
+            (PQ_CODES_DIR, codes_n),
             (PQ_CODEBOOK_DIR, len(read_pq_codebook(spark, workdir))),
         ],
         "artifact string, n_rows long",
