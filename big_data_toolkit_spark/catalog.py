@@ -114,9 +114,12 @@ _SCHEMAS: dict[tuple, tuple[tuple, StructType]] = {}
 _SCHEMAS_LOCK = threading.Lock()
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+def read_parquet(
+    spark: SparkSession, path: str, schema: str | None = None
+) -> DataFrame:
     """``spark.read.parquet(path)`` without the schema-inference job when
-    the path's data files are unchanged since the last read.
+    the path's data files are unchanged since the last read, or whenever
+    the caller passes the ``schema`` (a DDL string) its writer laid out.
 
     Spark infers a parquet schema by running a job that reads the
     footers, on every read. The inferred ``StructType`` is kept per path
@@ -128,6 +131,8 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     again. Paths ``os.stat`` cannot see (missing, ``hdfs://``, ``s3a://``)
     go straight to ``spark.read.parquet``, so they raise exactly what it
     raises. Safe to call from several threads (see ``_SCHEMAS``)."""
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
     try:
         stamp = tuple(
             (os.path.relpath(f, path), st.st_size, st.st_mtime_ns)

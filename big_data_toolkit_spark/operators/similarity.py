@@ -373,6 +373,18 @@ def _quantize(emb: DataFrame) -> DataFrame:
     )
 
 
+def _int_array_sql(values, bigint: bool = False) -> str:
+    """One SQL literal for an index-constant integer array:
+    ``array(30, 31, …)`` (INT) or ``array(30L, 31L, …)`` (BIGINT).
+
+    Parsed by ``F.expr`` (alone or inside a larger expression) the array
+    costs one py4j call whatever its length, where ``F.array`` over
+    ``F.lit``s costs several per element; Catalyst folds both to the same
+    ``containsNull=false`` literal."""
+    suffix = "L" if bigint else ""
+    return f"array({', '.join(f'{int(v)}{suffix}' for v in values)})"
+
+
 def _dist2(m: list[float]) -> Column:
     """Squared L2 from the quantized row vector to one centroid literal.
 
@@ -397,9 +409,7 @@ def _kmeans_assign(q: DataFrame, cents: dict[int, list[float]]) -> DataFrame:
     cids = sorted(cents)
     dists = F.array(*[_dist2(cents[c]) for c in cids])
     idx = F.array_position(dists, F.array_min(dists)).cast("int")
-    cluster = F.element_at(
-        F.array(*[F.lit(c).cast("long") for c in cids]), idx
-    )
+    cluster = F.element_at(F.expr(_int_array_sql(cids, bigint=True)), idx)
     return q.withColumn("cluster", cluster)
 
 
@@ -963,27 +973,41 @@ PQ_SUBDIM = EMB_DIM // PQ_SUBSPACES
 PQ_CODEBOOK_IDS = tuple(range(30, 46))  # 16 designated donor vectors
 
 
-def _pq_codebook(spark: SparkSession, sf_dir: str) -> dict[int, list[int]]:
+def _lookup_qv(spark: SparkSession, sf_dir: str, ids) -> dict[int, list[int]]:
+    """vec_id -> quantized vector for those of ``ids`` the embeddings table
+    holds: ONE lookup job, however many index-vector sets (codebook donors,
+    quantizer centroids, a query vector) ``ids`` joins. The ``IN`` list is
+    SQL text, one py4j call instead of a few per id. ``_codebook_of``,
+    ``_centroids_of`` and ``_query_of`` pick each set out and raise on its
+    missing ids."""
+    in_list = ", ".join(str(int(i)) for i in sorted(set(ids)))
+    rows = (
+        _quantize(load_table(spark, sf_dir, "embeddings"))
+        .where(f"vec_id IN ({in_list})")
+        .select("vec_id", "qv")
+        .collect()
+    )
+    return {r["vec_id"]: [int(x) for x in r["qv"]] for r in rows}
+
+
+def _codebook_of(found: dict[int, list[int]]) -> dict[int, list[int]]:
     """donor vec_id -> 64 quantized ints. PQ codebooks are per-subspace
     centroid sets; here centroid j of EVERY subspace is donor j's own
     subvector (the ``CENTROID_IDS``/``EMB_LSH_PLANES`` convention: fixed
     corpus vectors stand in for a seeded k-means so the oracle reproduces
     the index constants exactly — Lloyd refinement would slot in per
     subspace exactly as ``knn_ivf_trained`` does for IVF)."""
-    q = _quantize(load_table(spark, sf_dir, "embeddings"))
-    rows = (
-        q.where(F.col("vec_id").isin(list(PQ_CODEBOOK_IDS)))
-        .select("vec_id", "qv")
-        .collect()
-    )
-    found = {r["vec_id"]: [int(x) for x in r["qv"]] for r in rows}
-    if len(found) != len(PQ_CODEBOOK_IDS):
-        missing = sorted(set(PQ_CODEBOOK_IDS) - set(found))
+    missing = [j for j in PQ_CODEBOOK_IDS if j not in found]
+    if missing:
         raise ValueError(
             f"PQ codebook donor vectors not found in embeddings table: "
             f"{missing} — refusing to build a degenerate index"
         )
-    return found
+    return {j: found[j] for j in PQ_CODEBOOK_IDS}
+
+
+def _pq_codebook(spark: SparkSession, sf_dir: str) -> dict[int, list[int]]:
+    return _codebook_of(_lookup_qv(spark, sf_dir, PQ_CODEBOOK_IDS))
 
 
 def _pq_subdist(s: int, sub: list[int]) -> Column:
@@ -991,10 +1015,9 @@ def _pq_subdist(s: int, sub: list[int]) -> Column:
     row vector to one codebook subvector literal — same in-order JVM fold
     discipline as ``_dist2``, but over BIGINTs, so cross-engine equality is
     trivial (no float summation order to worry about)."""
-    arr = ", ".join(f"{int(v)}L" for v in sub)
     return F.expr(
         f"aggregate(zip_with(slice(qv, {s * PQ_SUBDIM + 1}, {PQ_SUBDIM}), "
-        f"array({arr}), (x, y) -> (x - y) * (x - y)), "
+        f"{_int_array_sql(sub, bigint=True)}, (x, y) -> (x - y) * (x - y)), "
         "0L, (acc, v) -> acc + v)"
     )
 
@@ -1023,10 +1046,10 @@ def _with_pq_idx(
             sub = _pq_subdist_tensor(Q, D)
             return pd.Series(list((np.argmin(sub, axis=2) + 1).astype(np.int32)))
 
-        return q.select("*", enc("qv").alias("_pq_idx_arr")).select(
+        return q.select("*", enc("qv").alias("_pq_idx_arr")).selectExpr(
             "*",
             *[
-                F.element_at("_pq_idx_arr", s + 1).alias(f"_pq_idx_{s}")
+                f"element_at(_pq_idx_arr, {s + 1}) AS _pq_idx_{s}"
                 for s in range(PQ_SUBSPACES)
             ],
         ).drop("_pq_idx_arr")
@@ -1059,17 +1082,15 @@ def pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     dids = sorted(donors)
     q = _quantize(load_table(spark, sf_dir, "embeddings"))
     coded = _with_pq_idx(q, donors)
-    did_arr = F.array(*[F.lit(j).cast("long") for j in dids])
-    structs = F.array(
-        *[
-            F.struct(
-                F.lit(s).cast("int").alias("subspace"),
-                F.element_at(did_arr, F.col(f"_pq_idx_{s}")).alias("code"),
-            )
-            for s in range(PQ_SUBSPACES)
-        ]
+    did_arr = _int_array_sql(dids, bigint=True)
+    structs = ", ".join(
+        f"named_struct('subspace', {s}, "
+        f"'code', element_at({did_arr}, _pq_idx_{s}))"
+        for s in range(PQ_SUBSPACES)
     )
-    return coded.select("vec_id", F.explode(structs).alias("sc")).select(
+    return coded.select(
+        "vec_id", F.explode(F.expr(f"array({structs})")).alias("sc")
+    ).select(
         "vec_id",
         F.col("sc.subspace").alias("subspace"),
         F.col("sc.code").alias("code"),
@@ -1095,17 +1116,34 @@ def _pq_lut_from_qv(
     ]
 
 
+def _query_of(found: dict[int, list[int]], query_vec_id: int) -> list[int]:
+    if query_vec_id not in found:
+        raise ValueError(
+            f"query vector {query_vec_id} not found in embeddings table"
+        )
+    return found[query_vec_id]
+
+
 def _pq_query_qv(
     spark: SparkSession, sf_dir: str, query_vec_id: int
 ) -> list[int]:
     """ONE point lookup of the quantized query vector."""
-    q = _quantize(load_table(spark, sf_dir, "embeddings"))
-    qrows = q.where(F.col("vec_id") == query_vec_id).select("qv").collect()
-    if not qrows:
-        raise ValueError(
-            f"query vector {query_vec_id} not found in embeddings table"
+    return _query_of(_lookup_qv(spark, sf_dir, (query_vec_id,)), query_vec_id)
+
+
+def _adc_from_lut(lut: list[list[int]]) -> Column:
+    """ADC of a coded corpus row against the driver-side LUT: the sum of
+    8 lookups of its ``_pq_idx_s`` code positions into BIGINT array
+    literals, parsed as ONE expression."""
+    return F.expr(
+        " + ".join(
+            ["0L"]
+            + [
+                f"element_at({_int_array_sql(lut[s], bigint=True)}, _pq_idx_{s})"
+                for s in range(PQ_SUBSPACES)
+            ]
         )
-    return [int(x) for x in qrows[0]["qv"]]
+    )
 
 
 def knn_pq(
@@ -1125,18 +1163,13 @@ def knn_pq(
     equality-tested against this in-plan twin). Exact-integer arithmetic
     end to end, so the DuckDB oracle hash-matches.
     """
-    donors = _pq_codebook(spark, sf_dir)
-    lut = _pq_lut_from_qv(donors, _pq_query_qv(spark, sf_dir, query_vec_id))
+    found = _lookup_qv(spark, sf_dir, PQ_CODEBOOK_IDS + (query_vec_id,))
+    donors = _codebook_of(found)
+    lut = _pq_lut_from_qv(donors, _query_of(found, query_vec_id))
     q = _quantize(load_table(spark, sf_dir, "embeddings"))
     coded = _with_pq_idx(q.where(F.col("vec_id") != query_vec_id), donors)
-    adc = F.lit(0).cast("long")
-    for s in range(PQ_SUBSPACES):
-        adc = adc + F.element_at(
-            F.array(*[F.lit(v).cast("long") for v in lut[s]]),
-            F.col(f"_pq_idx_{s}"),
-        )
     return (
-        coded.select("vec_id", adc.alias("adc_dist2"))
+        coded.select("vec_id", _adc_from_lut(lut).alias("adc_dist2"))
         .orderBy("adc_dist2", "vec_id")
         .limit(k)
     )
@@ -1167,13 +1200,11 @@ def pq_codes_col(donors: dict[int, list[int]]) -> Column:
     by ``pq_codes_wide`` and the ``plans.materialize`` artifact writer
     (and inverted by ``pq_corpus_from_codes``), so the persisted format
     cannot drift from the in-plan encode."""
-    did_arr = F.array(*[F.lit(j).cast("int") for j in sorted(donors)])
-    return F.array(
-        *[
-            F.element_at(did_arr, F.col(f"_pq_idx_{s}"))
-            for s in range(PQ_SUBSPACES)
-        ]
+    did_arr = _int_array_sql(sorted(donors))
+    codes = ", ".join(
+        f"element_at({did_arr}, _pq_idx_{s})" for s in range(PQ_SUBSPACES)
     )
+    return F.expr(f"array({codes})")
 
 
 def knn_pq_from_codes(
@@ -1198,15 +1229,18 @@ def knn_pq_from_codes(
     if qv is None:
         qv = _pq_query_qv(spark, sf_dir, query_vec_id)
     lut = _pq_lut_from_qv(donors, qv)
-    did_keys = F.array(*[F.lit(j).cast("int") for j in dids])
-    adc = F.lit(0).cast("long")
-    for s in range(PQ_SUBSPACES):
-        adc = adc + F.element_at(
-            F.map_from_arrays(
-                did_keys, F.array(*[F.lit(v).cast("long") for v in lut[s]])
-            ),
-            F.element_at("codes", s + 1),
+    did_keys = _int_array_sql(dids)
+    adc = F.expr(
+        " + ".join(
+            ["0L"]
+            + [
+                f"element_at(map_from_arrays({did_keys}, "
+                f"{_int_array_sql(lut[s], bigint=True)}), "
+                f"element_at(codes, {s + 1}))"
+                for s in range(PQ_SUBSPACES)
+            ]
         )
+    )
     return (
         codes_df.where(F.col("vec_id") != query_vec_id)
         .select("vec_id", adc.alias("adc_dist2"))
@@ -1223,32 +1257,28 @@ def _int_dist2(vec: list[int]) -> Column:
     """Exact integer squared-L2 from the full quantized row vector ``qv``
     to one integer-vector literal — the full-width form of
     ``_pq_subdist`` (same in-order JVM fold discipline)."""
-    arr = ", ".join(f"{int(v)}L" for v in vec)
     return F.expr(
-        f"aggregate(zip_with(qv, array({arr}), (x, y) -> (x - y) * (x - y)), "
-        "0L, (acc, v) -> acc + v)"
+        f"aggregate(zip_with(qv, {_int_array_sql(vec, bigint=True)}, "
+        "(x, y) -> (x - y) * (x - y)), 0L, (acc, v) -> acc + v)"
     )
+
+
+def _centroids_of(found: dict[int, list[int]]) -> dict[int, list[int]]:
+    """CENTROID_IDS corpus vectors on the fixed-point grid — the coarse
+    IVF quantizer the PQ-ANN cell assignment keys on (integer distances,
+    so both engines and both twins assign identically)."""
+    missing = [c for c in CENTROID_IDS if c not in found]
+    if missing:
+        raise ValueError(
+            f"coarse-quantizer centroid vectors missing: {missing}"
+        )
+    return {c: found[c] for c in CENTROID_IDS}
 
 
 def _quantized_centroids(
     spark: SparkSession, sf_dir: str
 ) -> dict[int, list[int]]:
-    """CENTROID_IDS corpus vectors on the fixed-point grid — the coarse
-    IVF quantizer the PQ-ANN cell assignment keys on (integer distances,
-    so both engines and both twins assign identically)."""
-    q = _quantize(load_table(spark, sf_dir, "embeddings"))
-    rows = (
-        q.where(F.col("vec_id").isin(list(CENTROID_IDS)))
-        .select("vec_id", "qv")
-        .collect()
-    )
-    found = {r["vec_id"]: [int(x) for x in r["qv"]] for r in rows}
-    if len(found) != len(CENTROID_IDS):
-        missing = sorted(set(CENTROID_IDS) - set(found))
-        raise ValueError(
-            f"coarse-quantizer centroid vectors missing: {missing}"
-        )
-    return found
+    return _centroids_of(_lookup_qv(spark, sf_dir, CENTROID_IDS))
 
 
 # Occupancy target for the ingest-ANN coarse quantizer: nlist derives
@@ -1301,16 +1331,14 @@ def derived_quantizer_cells(
     nlist = pq_nlist_for(table_row_count(sf_dir, "embeddings"))
     if nlist == len(CENTROID_IDS):
         return _quantized_centroids(spark, sf_dir)
-    q = _quantize(load_table(spark, sf_dir, "embeddings"))
-    ids = [
-        r["vec_id"]
-        for r in q.where(F.col("vec_id") >= CENTROID_IDS[0])
-        .select("vec_id")
+    rows = (
+        _quantize(load_table(spark, sf_dir, "embeddings"))
+        .where(F.col("vec_id") >= CENTROID_IDS[0])
+        .select("vec_id", "qv")
         .orderBy("vec_id")
         .limit(nlist)
         .collect()
-    ]
-    rows = q.where(F.col("vec_id").isin(ids)).select("vec_id", "qv").collect()
+    )
     return {r["vec_id"]: [int(x) for x in r["qv"]] for r in rows}
 
 
@@ -1321,7 +1349,7 @@ def pq_cell_col(cents_q: dict[int, list[int]]) -> Column:
     cids = sorted(cents_q)
     dists = F.array(*[_int_dist2(cents_q[c]) for c in cids])
     idx = F.array_position(dists, F.array_min(dists)).cast("int")
-    return F.element_at(F.array(*[F.lit(c).cast("long") for c in cids]), idx)
+    return F.element_at(F.expr(_int_array_sql(cids, bigint=True)), idx)
 
 
 def pq_lut_cols(donors: dict[int, list[int]]) -> list[Column]:
@@ -1402,16 +1430,15 @@ def pq_corpus_from_codes(
     only the existing side."""
     from big_data_toolkit_spark.operators.dedup import NEW_BATCH_MOD
 
-    did_arr = F.array(*[F.lit(j).cast("int") for j in sorted(donors)])
+    did_arr = _int_array_sql(sorted(donors))
     return codes_df.where(
         F.col("vec_id") % NEW_BATCH_MOD != NEW_BATCH_MOD - 1
-    ).select(
-        F.col("vec_id").alias("match_id"),
+    ).selectExpr(
+        "vec_id AS match_id",
         "cell",
         *[
-            F.array_position(did_arr, F.element_at("codes", s + 1))
-            .cast("int")
-            .alias(f"_pq_idx_{s}")
+            f"CAST(array_position({did_arr}, element_at(codes, {s + 1})) "
+            f"AS INT) AS _pq_idx_{s}"
             for s in range(PQ_SUBSPACES)
         ],
     )
@@ -1480,11 +1507,11 @@ def pq_corpus_encode_arrow(
             {"cell": _pq_cell_ids(Q, C, cids), "idx": list(idx)}
         )
 
-    return q.select("vec_id", encode("qv").alias("r")).select(
-        F.col("vec_id").alias("match_id"),
-        F.col("r.cell").alias("cell"),
+    return q.select("vec_id", encode("qv").alias("r")).selectExpr(
+        "vec_id AS match_id",
+        "r.cell AS cell",
         *[
-            F.element_at(F.col("r.idx"), s + 1).alias(f"_pq_idx_{s}")
+            f"element_at(r.idx, {s + 1}) AS _pq_idx_{s}"
             for s in range(PQ_SUBSPACES)
         ],
     )
@@ -1516,11 +1543,11 @@ def pq_new_encode_arrow(
             }
         )
 
-    return q.select("vec_id", encode("qv").alias("r")).select(
+    return q.select("vec_id", encode("qv").alias("r")).selectExpr(
         "vec_id",
-        F.col("r.cell").alias("cell"),
+        "r.cell AS cell",
         *[
-            F.element_at(F.col("r.luts"), s + 1).alias(f"_lut_{s}")
+            f"element_at(r.luts, {s + 1}) AS _lut_{s}"
             for s in range(PQ_SUBSPACES)
         ],
     )
@@ -1977,9 +2004,12 @@ def knn_ivfpq(
     is partition pruning), in-row code argmins, 8 LUT lookups — into
     TakeOrderedAndProject. Exact integer arithmetic; oracle hash-matches.
     """
-    donors = _pq_codebook(spark, sf_dir)
-    cents_q = _quantized_centroids(spark, sf_dir)
-    qv = _pq_query_qv(spark, sf_dir, query_vec_id)  # the one point lookup
+    found = _lookup_qv(
+        spark, sf_dir, PQ_CODEBOOK_IDS + CENTROID_IDS + (query_vec_id,)
+    )
+    donors = _codebook_of(found)
+    cents_q = _centroids_of(found)
+    qv = _query_of(found, query_vec_id)
     probe = sorted(
         sorted(cents_q),
         key=lambda c: (
@@ -1993,16 +2023,9 @@ def knn_ivfpq(
         _with_pq_idx(q.where(F.col("vec_id") != query_vec_id), donors),
         cents_q,
     )
-    dids = sorted(donors)
-    adc = F.lit(0).cast("long")
-    for s in range(PQ_SUBSPACES):
-        adc = adc + F.element_at(
-            F.array(*[F.lit(v).cast("long") for v in lut[s]]),
-            F.col(f"_pq_idx_{s}"),
-        )
     return (
         coded.where(F.col("cell").isin([int(c) for c in probe]))
-        .select("vec_id", adc.alias("adc_dist2"))
+        .select("vec_id", _adc_from_lut(lut).alias("adc_dist2"))
         .orderBy("adc_dist2", "vec_id")
         .limit(k)
     )

@@ -474,6 +474,9 @@ def bench_manifest_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 PQ_CODES_DIR = "pq_codes"
+# The code table's schema as the writer lays it out (the partition column
+# last), so a read after a fresh build runs no schema-inference job.
+PQ_CODES_SCHEMA = "vec_id BIGINT, codes ARRAY<INT>, cell INT"
 PQ_CODEBOOK_DIR = "pq_codebook"
 PQ_CENTROIDS_DIR = "pq_centroids"
 
@@ -515,15 +518,19 @@ def build_pq_artifact(
     bit-equal to a full build."""
     from big_data_toolkit_spark.catalog import load_table
     from big_data_toolkit_spark.operators.similarity import (
-        _pq_codebook,
+        CENTROID_IDS,
+        PQ_CODEBOOK_IDS,
+        _centroids_of,
+        _codebook_of,
+        _lookup_qv,
         _quantize,
-        _quantized_centroids,
         pq_codes_cell_frame,
     )
 
     codes_path = os.path.join(workdir, PQ_CODES_DIR)
-    donors = _pq_codebook(spark, sf_dir)
-    cents_q = _quantized_centroids(spark, sf_dir)
+    found = _lookup_qv(spark, sf_dir, PQ_CODEBOOK_IDS + CENTROID_IDS)
+    donors = _codebook_of(found)
+    cents_q = _centroids_of(found)
     # One scan emits codes + cell together via the shared
     # pq_codes_cell_frame encode (the same definition the compactor and
     # the in-plan ingest sides use — the store cannot drift from them).
@@ -552,7 +559,9 @@ def build_pq_artifact(
 
 
 def read_pq_codes(spark: SparkSession, workdir: str) -> DataFrame:
-    return read_parquet(spark, os.path.join(workdir, PQ_CODES_DIR))
+    return read_parquet(
+        spark, os.path.join(workdir, PQ_CODES_DIR), schema=PQ_CODES_SCHEMA
+    )
 
 
 def compact_pq_artifact(spark: SparkSession, sf_dir: str, workdir: str) -> None:

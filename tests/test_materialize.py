@@ -3,8 +3,11 @@ results IDENTICAL to the oracle-gated in-plan recompute forms."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
+from big_data_toolkit_spark.catalog import load_table, table_path, table_row_count
 from big_data_toolkit_spark.operators import dedup, pagerank, similarity
 from big_data_toolkit_spark.plans import materialize
 from tests.conftest import SF_SMOKE, count_jobs
@@ -301,6 +304,102 @@ def test_pq_compact_equals_full_build(spark, tmp_path):
     with pytest.raises(ValueError, match="already contains delta"):
         materialize.compact_pq_artifact(spark, SF_SMOKE, full_wd)
     assert code_rows(inc_wd) == code_rows(full_wd)  # nothing was appended
+
+
+def test_pq_codes_schema_is_the_inferred_schema(spark, tmp_path):
+    """``PQ_CODES_SCHEMA`` is what Spark infers for the code table, after
+    a fresh (corpus-only) build and after the compaction appends the
+    delta, so ``read_pq_codes`` runs no inference job and returns the
+    same rows."""
+    wd = str(tmp_path / "pq")
+    path = os.path.join(wd, materialize.PQ_CODES_DIR)
+    materialize.build_pq_artifact(spark, SF_SMOKE, wd, corpus_only=True)
+    for step in ("build", "compact"):
+        if step == "compact":
+            materialize.compact_pq_artifact(spark, SF_SMOKE, wd)
+        stored, jobs = count_jobs(
+            spark, f"pq-codes-read-{step}",
+            lambda: materialize.read_pq_codes(spark, wd),
+        )
+        inferred = spark.read.parquet(path)
+        assert jobs == 0
+        assert stored.schema == inferred.schema
+        assert sorted(stored.collect()) == sorted(inferred.collect())
+    assert len(stored.collect()) == table_row_count(SF_SMOKE, "embeddings")
+
+
+def test_pq_index_constants_cost_one_lookup_job(spark, tmp_path):
+    """The codebook, the coarse quantizer and the query vector that a
+    builder needs come from one lookup job: the artifact build runs that
+    job and its write, the in-plan searches only that job."""
+    load_table(spark, SF_SMOKE, "embeddings")  # warm the schema cache
+    _, build = count_jobs(
+        spark, "pq-build",
+        lambda: materialize.build_pq_artifact(
+            spark, SF_SMOKE, str(tmp_path / "pq")
+        ),
+    )
+    _, ivfpq = count_jobs(
+        spark, "knn-ivfpq", lambda: similarity.knn_ivfpq(spark, SF_SMOKE)
+    )
+    _, pq = count_jobs(
+        spark, "knn-pq", lambda: similarity.knn_pq(spark, SF_SMOKE)
+    )
+    assert (build, ivfpq, pq) == (2, 1, 1)
+
+
+def _embeddings_without(tmp_path, vec_id: int) -> str:
+    """An sf-dir whose embeddings table is the smoke table minus one id."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    table = pq.read_table(table_path(SF_SMOKE, "embeddings"))
+    sf_dir = tmp_path / f"sf-without-{vec_id}"
+    sf_dir.mkdir()
+    pq.write_table(
+        table.filter(pc.not_equal(table["vec_id"], vec_id)),
+        table_path(str(sf_dir), "embeddings"),
+    )
+    return str(sf_dir)
+
+
+@pytest.mark.parametrize(
+    "vec_id, message, builders",
+    [
+        (
+            similarity.PQ_CODEBOOK_IDS[0],
+            r"PQ codebook donor vectors not found .*\[30\]",
+            ("build", "knn_pq", "knn_ivfpq"),
+        ),
+        (
+            similarity.CENTROID_IDS[0],
+            r"coarse-quantizer centroid vectors missing: \[10\]",
+            ("build", "knn_ivfpq"),
+        ),
+        (
+            similarity.QUERY_VEC_ID,
+            r"query vector 0 not found in embeddings table",
+            ("knn_pq", "knn_ivfpq"),
+        ),
+    ],
+)
+def test_pq_lookup_names_the_missing_index_vector(
+    spark, tmp_path, vec_id, message, builders
+):
+    """Each index-vector set in the shared lookup keeps its own error:
+    a table without a codebook donor, a quantizer centroid or the query
+    vector refuses to build, naming the id."""
+    sf_dir = _embeddings_without(tmp_path, vec_id)
+    run = {
+        "build": lambda: materialize.build_pq_artifact(
+            spark, sf_dir, str(tmp_path / "pq")
+        ),
+        "knn_pq": lambda: similarity.knn_pq(spark, sf_dir),
+        "knn_ivfpq": lambda: similarity.knn_ivfpq(spark, sf_dir),
+    }
+    for name in builders:
+        with pytest.raises(ValueError, match=message):
+            run[name]()
 
 
 def test_semantic_centroids_derived_k_above_threshold(spark, tmp_path):

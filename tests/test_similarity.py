@@ -1,5 +1,8 @@
 from __future__ import annotations
 
+import ast
+import pathlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -798,3 +801,58 @@ def test_with_pq_idx_arrow_matches_expression(spark):
     expr = key(sim._with_pq_idx(q, donors, arrow=False))
     arw = key(sim._with_pq_idx(q, donors, arrow=True))
     assert expr == arw and len(arw) > 0
+
+
+def test_derived_quantizer_past_the_floor_is_one_job(spark, monkeypatch):
+    """Past the 16-cell floor the quantizer is the nlist lowest vec_ids at
+    or above CENTROID_IDS' start, each on the fixed-point grid, fetched
+    by one job."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    from big_data_toolkit_spark.catalog import load_table, table_path
+    from tests.conftest import count_jobs
+
+    table = pq.read_table(table_path(SF_ORACLE, "embeddings")).to_pydict()
+    emb = dict(zip(table["vec_id"], table["embedding"]))
+    ids = sorted(i for i in emb if i >= sim.CENTROID_IDS[0])[:32]
+    expected = {
+        i: np.floor(np.asarray(emb[i], dtype=np.float64) * sim.KMEANS_QUANT)
+        .astype(np.int64)
+        .tolist()
+        for i in ids
+    }
+    monkeypatch.setattr(sim, "pq_nlist_for", lambda n: 32)
+    load_table(spark, SF_ORACLE, "embeddings")  # warm the schema cache
+    derived, jobs = count_jobs(
+        spark,
+        "derived-quantizer-32",
+        lambda: sim.derived_quantizer_cells(spark, SF_ORACLE),
+    )
+    assert derived == expected
+    assert jobs == 1
+
+
+def _lits_in_comprehensions(tree: ast.AST) -> list[int]:
+    comps = (ast.ListComp, ast.SetComp, ast.DictComp, ast.GeneratorExp)
+    return sorted(
+        {
+            node.lineno
+            for comp in ast.walk(tree)
+            if isinstance(comp, comps)
+            for node in ast.walk(comp)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "lit"
+            and isinstance(node.func.value, ast.Name)
+            and node.func.value.id == "F"
+        }
+    )
+
+
+def test_index_constants_are_not_built_one_literal_per_element():
+    """An index-constant array built as ``F.array`` over ``F.lit``s pays
+    several py4j calls per element; ``_int_array_sql`` parses the whole
+    array as one SQL literal instead."""
+    source = pathlib.Path(sim.__file__).read_text()
+    assert _lits_in_comprehensions(ast.parse(source)) == []
