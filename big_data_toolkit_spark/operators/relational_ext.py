@@ -296,8 +296,9 @@ def user_value_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     value — ``(sum_cents_1h * 10000) DIV n_1h``, truncating integer
     division (both engines truncate toward zero; sums here are
     non-negative) — per the repo's integer-output protocol
-    (BASELINE.md "Known driver-hash sensitivities"): a round(x, 6)
-    DOUBLE hashed red in CORRECTNESS_r06 despite value-identical results.
+    (BASELINE.md "Known driver-hash sensitivities"): the driver's gate
+    hashes serialized cells, so a round(x, 6) DOUBLE can hash differently
+    across the two engines even when the values are identical.
 
     Scale: one shuffle on user_id, per-user sorted frames — the standard
     window plan; frame state is one running (sum, count), never the event

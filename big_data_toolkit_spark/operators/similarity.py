@@ -1342,6 +1342,33 @@ def derived_quantizer_cells(
     return {r["vec_id"]: [int(x) for x in r["qv"]] for r in rows}
 
 
+def _pq_ingest_constants(
+    spark: SparkSession,
+    sf_dir: str,
+    donors: dict[int, list[int]] | None,
+    cents_q: dict[int, list[int]] | None,
+) -> tuple[dict[int, list[int]], dict[int, list[int]]]:
+    """(donors, cents_q) of the ingest-ANN shapes: each one passed in, or
+    else the codebook and the SIZE-DERIVED quantizer (``pq_nlist_for``:
+    the pinned 16-cell oracle quantizer at every driver SF,
+    occupancy-bounded cells beyond). When both are missing at the 16-cell
+    floor they come from ONE ``_lookup_qv`` job; past the floor
+    ``derived_quantizer_cells`` keeps its own collect."""
+    if (
+        donors is None
+        and cents_q is None
+        and pq_nlist_for(table_row_count(sf_dir, "embeddings"))
+        == len(CENTROID_IDS)
+    ):
+        found = _lookup_qv(spark, sf_dir, PQ_CODEBOOK_IDS + CENTROID_IDS)
+        return _codebook_of(found), _centroids_of(found)
+    if donors is None:
+        donors = _pq_codebook(spark, sf_dir)
+    if cents_q is None:
+        cents_q = derived_quantizer_cells(spark, sf_dir)
+    return donors, cents_q
+
+
 def pq_cell_col(cents_q: dict[int, list[int]]) -> Column:
     """Coarse cell id: argmin integer squared-L2 from ``qv`` to the
     centroid literals, ties to the smallest centroid id — map-only, works
@@ -1398,10 +1425,7 @@ def pq_corpus_coded(
 
     if arrow is None:
         arrow = PQ_INGEST_ARROW
-    if donors is None:
-        donors = _pq_codebook(spark, sf_dir)
-    if cents_q is None:
-        cents_q = derived_quantizer_cells(spark, sf_dir)
+    donors, cents_q = _pq_ingest_constants(spark, sf_dir, donors, cents_q)
     q = _quantize(load_table(spark, sf_dir, "embeddings")).where(
         F.col("vec_id") % NEW_BATCH_MOD != NEW_BATCH_MOD - 1
     )
@@ -1635,14 +1659,9 @@ def _pq_ingest_sides(
 
     if arrow is None:
         arrow = PQ_INGEST_ARROW
-    if donors is None:
-        donors = _pq_codebook(spark, sf_dir)
-    if cents_q is None:
-        # SIZE-DERIVED nlist (pq_nlist_for): the pinned 16-cell oracle
-        # quantizer at every driver SF, occupancy-bounded cells beyond —
-        # the fixed-nlist n²/16 candidate blowup the ×32 probe measured
-        # corrects itself with zero configuration.
-        cents_q = derived_quantizer_cells(spark, sf_dir)
+    # The size-derived quantizer: the fixed-nlist n²/16 candidate blowup
+    # the ×32 probe measured corrects itself with zero configuration.
+    donors, cents_q = _pq_ingest_constants(spark, sf_dir, donors, cents_q)
     if corpus is None:
         corpus = pq_corpus_coded(spark, sf_dir, donors, cents_q, arrow=arrow)
     delta = _quantize(load_table(spark, sf_dir, "embeddings")).where(

@@ -2,7 +2,8 @@
 
 Runs a Spark query and its oracle SQL side-by-side at a given sf_dir and
 compares row count, column names, and order-insensitive values — the same
-gate CORRECTNESS_r{N}.json records, so a pass here predicts a pass there.
+checks the driver's correctness gate makes, so a pass here predicts a pass
+there.
 """
 
 from __future__ import annotations

@@ -348,6 +348,20 @@ def test_pq_index_constants_cost_one_lookup_job(spark, tmp_path):
     assert (build, ivfpq, pq) == (2, 1, 1)
 
 
+def test_pq_ingest_constants_cost_one_lookup_job(spark):
+    """At the 16-cell floor the ingest-ANN builders fetch the codebook and
+    the coarse quantizer in one lookup job, and plan the rest."""
+    load_table(spark, SF_SMOKE, "embeddings")  # warm the schema cache
+    _, incremental = count_jobs(
+        spark, "ann-pq-incremental",
+        lambda: similarity.ann_pq_incremental(spark, SF_SMOKE),
+    )
+    _, join = count_jobs(
+        spark, "knn-join-pq", lambda: similarity.knn_join_pq(spark, SF_SMOKE)
+    )
+    assert (incremental, join) == (1, 1)
+
+
 def _embeddings_without(tmp_path, vec_id: int) -> str:
     """An sf-dir whose embeddings table is the smoke table minus one id."""
     import pyarrow.compute as pc
@@ -369,12 +383,12 @@ def _embeddings_without(tmp_path, vec_id: int) -> str:
         (
             similarity.PQ_CODEBOOK_IDS[0],
             r"PQ codebook donor vectors not found .*\[30\]",
-            ("build", "knn_pq", "knn_ivfpq"),
+            ("build", "knn_pq", "knn_ivfpq", "ingest"),
         ),
         (
             similarity.CENTROID_IDS[0],
             r"coarse-quantizer centroid vectors missing: \[10\]",
-            ("build", "knn_ivfpq"),
+            ("build", "knn_ivfpq", "ingest"),
         ),
         (
             similarity.QUERY_VEC_ID,
@@ -388,7 +402,8 @@ def test_pq_lookup_names_the_missing_index_vector(
 ):
     """Each index-vector set in the shared lookup keeps its own error:
     a table without a codebook donor, a quantizer centroid or the query
-    vector refuses to build, naming the id."""
+    vector refuses to build, naming the id. The ingest builders share the
+    codebook and quantizer lookup."""
     sf_dir = _embeddings_without(tmp_path, vec_id)
     run = {
         "build": lambda: materialize.build_pq_artifact(
@@ -396,6 +411,7 @@ def test_pq_lookup_names_the_missing_index_vector(
         ),
         "knn_pq": lambda: similarity.knn_pq(spark, sf_dir),
         "knn_ivfpq": lambda: similarity.knn_ivfpq(spark, sf_dir),
+        "ingest": lambda: similarity.ann_pq_incremental(spark, sf_dir),
     }
     for name in builders:
         with pytest.raises(ValueError, match=message):

@@ -6,12 +6,17 @@ that pyspark comes from ``$SPARK_HOME/python``. The shuffle and state
 partitions: sized from the session's cores, and pinned per checkpoint for a
 stream started before that sizing. The checkpoint manager: the FileSystem
 one on a local master, Spark's default on any other, still refusing to
-overwrite, and able to resume a checkpoint the default one started."""
+overwrite, and able to resume a checkpoint the default one started. The
+driver JVM's CDS archive: its claim, key, size check and promotion as
+plain functions over a fake JDK and Spark install, then one session that
+dumps it and one that maps it."""
 
 from __future__ import annotations
 
 import json
 import os
+import subprocess
+import sys
 from types import SimpleNamespace
 
 import pytest
@@ -314,3 +319,212 @@ def test_checkpoint_from_the_default_manager_resumes(spark, tmp_path):
 
     assert [p["batchId"] for p in second] == [1]
     assert _final_trend_rows(spark, out) == _batch_trend_rows(spark)
+
+
+# --- Driver JVM class-data-sharing archive ------------------------------
+
+
+@pytest.fixture
+def cds_env(tmp_path, monkeypatch):
+    """A fake JDK and Spark install and a cache, all under ``tmp_path``, so
+    no test reads or deletes a real archive. Returns the cds directory."""
+    java_home, spark_home = tmp_path / "jdk", tmp_path / "spark"
+    for rel in ("bin/java", "lib/server/libjvm.so"):
+        (java_home / rel).parent.mkdir(parents=True, exist_ok=True)
+        (java_home / rel).write_bytes(b"jvm")
+    (spark_home / "jars").mkdir(parents=True)
+    (spark_home / "jars/spark-core.jar").write_bytes(b"jar")
+    (spark_home / "conf").mkdir()
+    (spark_home / "conf/spark-defaults.conf.template").write_text("")
+    monkeypatch.setenv("JAVA_HOME", str(java_home))
+    monkeypatch.setenv("SPARK_HOME", str(spark_home))
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "cache"))
+    for name in ("SPARK_CONF_DIR", "PYSPARK_SUBMIT_ARGS", *session._CLASSPATH_ENV):
+        monkeypatch.delenv(name, raising=False)
+    return tmp_path / "cache/big_data_toolkit_spark/cds"
+
+
+def _dump_and_promote(returncode=0, size=64):
+    """One dumping launch: claim, a ``.part`` of ``size`` bytes, exit."""
+    archive = session._driver_archive("local[4]", None)
+    assert archive.part is not None
+    with open(archive.part, "wb") as fh:
+        fh.write(b"\0" * size)
+    session._promote(archive, returncode)
+    return archive
+
+
+def _files(cds):
+    return sorted(p.name for p in cds.iterdir() if p.name != "conf")
+
+
+def test_missing_archive_gives_one_claimant_the_dump(cds_env):
+    first = session._driver_archive("local[4]", None)
+
+    assert first.part is not None and first.claim is not None
+    assert f"-XX:ArchiveClassesAtExit={first.part}" in first.java_options
+    assert "-Xlog:cds=off -Xlog:cds+dynamic=off" in first.java_options
+    assert first.conf_dir == str(cds_env / "conf")
+    assert os.listdir(first.conf_dir) == []
+    # The claimant is alive (this process): nobody else dumps.
+    assert session._driver_archive("local[4]", None) is None
+
+
+def test_live_claim_makes_a_second_caller_start_stock(cds_env):
+    first = session._driver_archive("local[4]", None)
+    with open(first.claim, "w") as fh:
+        fh.write(str(os.getppid()))
+
+    assert session._driver_archive("local[4]", None) is None
+
+
+def test_dead_owners_claim_is_reclaimed(cds_env):
+    first = session._driver_archive("local[4]", None)
+    gone = subprocess.Popen(["true"])
+    gone.wait()
+    with open(first.claim, "w") as fh:
+        fh.write(str(gone.pid))
+
+    again = session._driver_archive("local[4]", None)
+
+    assert again is not None and again.claim == first.claim
+    with open(again.claim) as fh:
+        assert fh.read() == str(os.getpid())
+
+
+def test_promoted_archive_is_mapped_and_a_new_jar_set_replaces_it(cds_env):
+    old = _dump_and_promote(size=64)
+    old_key = os.path.basename(old.part).split(".")[0]
+    assert _files(cds_env) == [f"{old_key}-64.jsa"]
+
+    mapped = session._driver_archive("local[4]", None)
+    archive = cds_env / f"{old_key}-64.jsa"
+    assert mapped.part is None and mapped.claim is None
+    assert f"-XX:SharedArchiveFile={archive} -Xshare:auto" in mapped.java_options
+    assert "-Xlog:cds=off" in mapped.java_options
+
+    jar = cds_env.parents[2] / "spark/jars/spark-sql.jar"
+    jar.write_bytes(b"new jar")
+    new = _dump_and_promote(size=96)
+    new_key = os.path.basename(new.part).split(".")[0]
+
+    assert new_key != old_key
+    assert _files(cds_env) == [f"{new_key}-96.jsa"]
+
+
+@pytest.mark.parametrize("actual", [10, 0, 128], ids=["truncated", "empty", "longer"])
+def test_archive_whose_size_does_not_match_is_deleted_not_mapped(cds_env, actual):
+    key = os.path.basename(_dump_and_promote(size=64).part).split(".")[0]
+    archive = cds_env / f"{key}-64.jsa"
+    archive.write_bytes(b"\0" * actual)
+
+    again = session._driver_archive("local[4]", None)
+
+    assert not archive.exists()
+    assert again.part is not None  # no archive: this session dumps
+    assert "SharedArchiveFile" not in again.java_options
+
+
+def test_non_zero_jvm_exit_promotes_nothing(cds_env):
+    _dump_and_promote(returncode=1)
+    assert _files(cds_env) == []
+
+
+@pytest.mark.parametrize(
+    "master, extra, env",
+    [
+        ("spark://h:7077", None, {}),
+        ("yarn", None, {}),
+        ("local[4]", {session._JAVA_OPTIONS_KEY: "-Xss4m"}, {}),
+        ("local[4]", {session._CLASSPATH_KEY: "/x.jar"}, {}),
+        ("local[4]", None, {"PYSPARK_SUBMIT_ARGS": "--driver-java-options -Xss4m pyspark-shell"}),
+        ("local[4]", None, {"HADOOP_CONF_DIR": "/etc/hadoop"}),
+    ],
+    ids=["standalone", "yarn", "java-options", "class-path", "submit-args", "hadoop-conf"],
+)
+def test_archive_only_for_a_stock_local_launch(cds_env, monkeypatch, master, extra, env):
+    for name, value in env.items():
+        monkeypatch.setenv(name, value)
+    assert session._driver_archive(master, extra) is None
+    assert not cds_env.exists() or _files(cds_env) == []
+
+
+def test_conf_dir_with_a_user_file_gives_no_archive(cds_env, tmp_path, monkeypatch):
+    user_conf = tmp_path / "user-conf"
+    user_conf.mkdir()
+    (user_conf / "log4j2.properties.template").write_text("")
+    monkeypatch.setenv("SPARK_CONF_DIR", str(user_conf))
+    assert session._driver_archive("local[4]", None) is not None
+    session._remove(str(next(cds_env.glob("*.claim"))))
+
+    (user_conf / "spark-defaults.conf").write_text("spark.ui.enabled false\n")
+    assert session._driver_archive("local[4]", None) is None
+
+
+def test_conf_dir_is_swapped_only_for_the_launch(monkeypatch):
+    monkeypatch.setenv("SPARK_CONF_DIR", "/user/conf")
+    with session._conf_dir("/cache/conf"):
+        assert os.environ["SPARK_CONF_DIR"] == "/cache/conf"
+    assert os.environ["SPARK_CONF_DIR"] == "/user/conf"
+    monkeypatch.delenv("SPARK_CONF_DIR")
+    with session._conf_dir("/cache/conf"):
+        pass
+    assert "SPARK_CONF_DIR" not in os.environ
+
+
+def test_uncreatable_cache_gives_no_archive(cds_env, tmp_path, monkeypatch):
+    (tmp_path / "not-a-dir").write_text("")
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "not-a-dir"))
+    assert session._driver_archive("local[4]", None) is None
+
+
+_CDS_SESSION = """
+import json, os
+from pyspark import SparkContext
+from big_data_toolkit_spark.session import build_spark
+
+spark = build_spark(app_name="cds-test", master="local[1]")
+count = spark.range(1).count()
+cache = os.environ["XDG_CACHE_HOME"]
+with open(f"/proc/{SparkContext._gateway.proc.pid}/maps") as fh:
+    mapped = sorted({
+        line.split()[-1] for line in fh
+        if line.split()[-1].startswith(cache) and line.rstrip().endswith(".jsa")
+    })
+print(json.dumps({"count": count, "mapped": mapped}))
+"""
+
+
+def test_first_session_dumps_the_archive_and_the_next_maps_it(tmp_path):
+    """Two real sessions on a fresh cache. The first dumps: it exits
+    without stopping, the ``atexit`` hook waits for its JVM, and the
+    archive is promoted; its stdout holds only the script's own line. The
+    second maps that archive and runs a job."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, XDG_CACHE_HOME=str(tmp_path), PYTHONPATH=root)
+    cds = tmp_path / "big_data_toolkit_spark/cds"
+
+    def run():
+        out = subprocess.run(
+            [sys.executable, "-c", _CDS_SESSION], cwd=root, env=env,
+            capture_output=True, text=True, timeout=240,
+        )
+        assert out.returncode == 0, out.stderr[-2000:]
+        lines = out.stdout.splitlines()
+        assert len(lines) == 1, lines[:5]
+        return json.loads(lines[0])
+
+    try:
+        first = run()
+        archives = list(cds.glob("*.jsa"))
+        assert first == {"count": 1, "mapped": []}
+        assert len(archives) == 1
+        assert _files(cds) == [archives[0].name]  # no claim, no .part
+        size = int(archives[0].stem.rsplit("-", 1)[1])
+        assert archives[0].stat().st_size == size
+
+        assert run() == {"count": 1, "mapped": [str(archives[0])]}
+    finally:
+        for path in cds.glob("*"):
+            if path.is_file():
+                path.unlink()
