@@ -36,11 +36,11 @@ do the same thing: a rename without overwrite checks the destination,
 then calls ``rename(2)``; both raise when an atomic create would replace
 an existing file; both write the same file names, ``.crc`` files and
 Spark's checkpoint checksums included, so a checkpoint started under one
-resumes under the other. The ``chmod`` processes stay:
-``RawLocalFileSystem.setPermission`` forks one per created file unless the
-native library is loaded, whichever manager runs. On HDFS the FileContext
-rename is one atomic RPC, which is why any other master keeps Spark's
-default. A local session that checkpoints to HDFS should pass
+resumes under the other. The FileSystem manager creates files through the
+session's local FileSystem, which sets permissions without ``chmod``
+(below); the FileContext manager goes through Hadoop's own ``LocalFs``,
+which still forks it. On HDFS the FileContext rename is one atomic RPC, which is why any other master
+keeps Spark's default. A local session that checkpoints to HDFS should pass
 ``org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager``
 for ``spark.sql.streaming.checkpointFileManagerClass`` in ``extra_conf``.
 
@@ -86,6 +86,53 @@ the environment adds to the launcher's class path, when the conf dir holds
 a real file (a user's ``spark-defaults.conf``, ``spark-env.sh`` or
 ``log4j2.properties`` is never hidden), when the cache directory cannot be
 created, and while another process holds the dump claim.
+
+A local master also writes files without forking ``chmod``. Without
+Hadoop's native library, ``RawLocalFileSystem.setPermission`` forks one
+``chmod`` for every file and directory that a parquet write or a streaming
+checkpoint creates. JFR ``jdk.ProcessStart`` in the driver JVM on
+``local[4]`` counted 202 for one 16-cell ``partitionBy`` write of 500 rows
+and 495 over one ``perfbench`` ``stream_replay`` run (five two-micro-batch
+replays, each from a fresh checkpoint); with the class below, none.
+``bdts.NioLocalFileSystem`` (``NioLocalFileSystem.java`` next to this
+module) is Hadoop's checksummed ``LocalFileSystem`` over a
+``RawLocalFileSystem`` whose ``setPermission`` sets the same mode bits
+(``rwxr-xr-x`` where ``chmod`` gets ``0755``) with
+``java.nio.file.Files.setPosixFilePermissions``; a permission with the
+sticky bit, which NIO cannot set, still goes to ``chmod``. Everything else
+is Hadoop's ``LocalFileSystem``. Without ``fs.file.impl``, a Spark build
+that ships the Hive jars resolves ``file:`` to Hive's
+``ProxyLocalFileSystem`` instead, whose one override makes a rename onto an
+existing file return false: an atomic create that Spark lets overwrite
+(state-store deltas and snapshots) then keeps the old file and leaves its
+temporary file behind, where this class replaces it. A driver JVM that
+``build_spark`` launches on a local master gets the class on its class path
+and ``spark.hadoop.fs.file.impl=bdts.NioLocalFileSystem``:
+
+* The source is compiled once, with the ``javac`` next to the ``java`` that
+  ``spark-class`` runs (so the class file version matches the runtime),
+  against ``$SPARK_HOME/jars/*``: about 2 s on 4 cores. The jar is written
+  to a temporary name and renamed to
+  ``${XDG_CACHE_HOME:-~/.cache}/big_data_toolkit_spark/jvm/<key>.jar``; the
+  key hashes the archive key and the source.
+* The jar is appended to the launcher's class path through
+  ``SPARK_DIST_CLASSPATH``, after any value the caller gave it, and the
+  caller's environment is restored after the launch. It is never
+  prepended (``spark.driver.extraClassPath``): the JDK maps a CDS archive
+  only while the class path it was dumped with is a prefix of the current
+  one, and a rejected archive costs about 5 s of set-up.
+* The launch that dumps the archive runs on the stock file system. An
+  archive dumped with the jar on its class path is rejected by a later
+  launch whose jar lies elsewhere; one dumped without it is mapped with the
+  jar appended. The jar is not part of the archive key either, so a
+  checkout with this class and one without share one archive instead of
+  each deleting the other's.
+* ``fs.file.impl`` is set only when the jar is on the launched JVM's class
+  path: Spark resolves ``file:`` before it loads ``spark.jars``, so the
+  class cannot come that way. The session keeps the stock file system on a
+  non-local master, when a JVM is already running, when ``extra_conf`` sets
+  ``spark.hadoop.fs.file.impl``, in the dumping launch, and when there is
+  no ``javac``, the compile fails or the cache directory cannot be created.
 """
 
 from __future__ import annotations
@@ -97,7 +144,10 @@ import hashlib
 import os
 import shlex
 import shutil
+import subprocess
+import tempfile
 import threading
+import zipfile
 from typing import NamedTuple
 
 from pyspark import SparkContext
@@ -143,6 +193,17 @@ _CDS_QUIET = "-Xlog:cds=off -Xlog:cds+dynamic=off"
 # before it kills it and promotes nothing.
 _DUMP_EXIT_WAIT_S = 120
 
+# --- Local file system without ``chmod`` forks (see the module docstring) ---
+_FS_IMPL_KEY = "spark.hadoop.fs.file.impl"
+_NIO_FS_CLASS = "bdts.NioLocalFileSystem"
+_NIO_FS_SOURCE = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "NioLocalFileSystem.java"
+)
+# The launcher appends this variable's entries to the driver's class path.
+_DIST_CLASSPATH_ENV = "SPARK_DIST_CLASSPATH"
+# About 2 s on 4 cores; a javac that hangs leaves the session on the stock FS.
+_COMPILE_TIMEOUT_S = 120
+
 
 class _Archive(NamedTuple):
     """How one driver JVM launch uses the CDS archive: the Java options it
@@ -153,6 +214,15 @@ class _Archive(NamedTuple):
     conf_dir: str
     part: str | None = None
     claim: str | None = None
+
+
+class _Launch(NamedTuple):
+    """What ``getOrCreate`` adds to a driver JVM launch: builder confs,
+    environment variables set for the launch only, and the CDS archive."""
+
+    conf: dict[str, str]
+    env: dict[str, str]
+    archive: _Archive | None = None
 
 
 def _is_local(master: str) -> bool:
@@ -210,23 +280,42 @@ def build_spark(
 
 
 def _get_or_create(builder, master: str, extra_conf: dict[str, str] | None) -> SparkSession:
-    """``builder.getOrCreate()``; a driver JVM that it launches starts from
-    the CDS archive when ``_driver_archive`` gives one."""
-    launches = SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ
-    archive = _driver_archive(master, extra_conf) if launches else None
-    if archive is None:
-        return builder.getOrCreate()
-    builder = builder.config(_JAVA_OPTIONS_KEY, archive.java_options)
+    """``builder.getOrCreate()`` with the confs and environment of
+    ``_launch``; promote the archive after a dumping JVM exits."""
+    launch = _launch(master, extra_conf)
+    for key, value in launch.conf.items():
+        builder = builder.config(key, value)
+    dumps = launch.archive is not None and launch.archive.part is not None
     try:
-        with _conf_dir(archive.conf_dir):
+        with _launch_env(launch.env):
             spark = builder.getOrCreate()
     except BaseException:
-        if archive.part:
-            _promote(archive, None)
+        if dumps:
+            _promote(launch.archive, None)
         raise
-    if archive.part:
-        _promote_when_jvm_exits(archive, SparkContext._gateway.proc)
+    if dumps:
+        _promote_when_jvm_exits(launch.archive, SparkContext._gateway.proc)
     return spark
+
+
+def _launch(master: str, extra_conf: dict[str, str] | None) -> _Launch:
+    """The CDS archive and the NIO file system for a driver JVM that
+    ``getOrCreate`` is about to launch for ``master``; nothing when a JVM is
+    already running (a SparkContext, or a gateway given through
+    ``PYSPARK_GATEWAY_PORT``)."""
+    if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
+        return _Launch({}, {})
+    conf, env = {}, {}
+    archive = _driver_archive(master, extra_conf)
+    if archive is not None:
+        conf[_JAVA_OPTIONS_KEY] = archive.java_options
+        env["SPARK_CONF_DIR"] = archive.conf_dir
+    jar = _local_fs_jar(master, extra_conf, archive)
+    if jar is not None:
+        conf[_FS_IMPL_KEY] = _NIO_FS_CLASS
+        user = os.environ.get(_DIST_CLASSPATH_ENV)
+        env[_DIST_CLASSPATH_ENV] = f"{user}{os.pathsep}{jar}" if user else jar
+    return _Launch(conf, env, archive)
 
 
 def _session_conf(sc, extra_conf: dict[str, str] | None) -> dict[str, str]:
@@ -272,26 +361,41 @@ def _driver_archive(master: str, extra_conf: dict[str, str] | None) -> _Archive 
     key = _archive_key(spark_home)
     if key is None:
         return None
-    cache = os.path.join(
-        env.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache"),
+    conf = _cache_dir("cds", "conf")
+    if conf is None:
+        return None
+    return _archive_for(os.path.dirname(conf), key)
+
+
+def _cache_dir(*parts: str) -> str | None:
+    """``${XDG_CACHE_HOME:-~/.cache}/big_data_toolkit_spark/<parts>``,
+    created; None when it cannot be."""
+    path = os.path.join(
+        os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache"),
         "big_data_toolkit_spark",
-        "cds",
+        *parts,
     )
     try:
-        os.makedirs(os.path.join(cache, "conf"), exist_ok=True)
+        os.makedirs(path, exist_ok=True)
     except OSError:
         return None
-    return _archive_for(cache, key)
+    return path
+
+
+def _java() -> str | None:
+    """The ``java`` that ``spark-class`` runs, resolved:
+    ``$JAVA_HOME/bin/java``, else ``java`` on ``PATH``."""
+    java_home = os.environ.get("JAVA_HOME")
+    java = os.path.join(java_home, "bin", "java") if java_home else shutil.which("java")
+    return os.path.realpath(java) if java else None
 
 
 def _archive_key(spark_home: str) -> str | None:
     """Hash of the JDK ``spark-class`` runs and of ``$SPARK_HOME/jars``,
     each file by path, size and mtime; None when the JDK is not found."""
-    java_home = os.environ.get("JAVA_HOME")
-    java = os.path.join(java_home, "bin", "java") if java_home else shutil.which("java")
-    if not java:
+    java = _java()
+    if java is None:
         return None
-    java = os.path.realpath(java)
     libjvm = os.path.join(
         os.path.dirname(os.path.dirname(java)), "lib", "server", "libjvm.so"
     )
@@ -382,18 +486,71 @@ def _remove(path: str) -> None:
         os.remove(path)
 
 
+def _local_fs_jar(
+    master: str, extra_conf: dict[str, str] | None, archive: _Archive | None
+) -> str | None:
+    """The jar of ``bdts.NioLocalFileSystem`` for a driver JVM about to
+    launch for ``master`` with ``archive``, compiled on first use; None to
+    keep the stock file system (the cases the module docstring lists)."""
+    if not _is_local(master) or _FS_IMPL_KEY in (extra_conf or {}):
+        return None
+    if archive is not None and archive.part is not None:
+        return None
+    from pyspark.find_spark_home import _find_spark_home
+
+    spark_home = _find_spark_home()
+    java, key, cache = _java(), _archive_key(spark_home), _cache_dir("jvm")
+    if java is None or key is None or cache is None:
+        return None
+    with open(_NIO_FS_SOURCE, "rb") as fh:
+        source = fh.read()
+    name = hashlib.sha256(key.encode() + b"\0" + source).hexdigest()[:16]
+    jar = os.path.join(cache, f"{name}.jar")
+    if os.path.isfile(jar) or _compile_jar(os.path.dirname(java), spark_home, jar):
+        return jar
+    return None
+
+
+def _compile_jar(java_bin: str, spark_home: str, jar: str) -> bool:
+    """Compile ``_NIO_FS_SOURCE`` with ``java_bin/javac`` against the Spark
+    jars into ``jar``, through a temporary name; False on any failure.
+    javac's output is captured, never printed."""
+    try:
+        with tempfile.TemporaryDirectory(dir=os.path.dirname(jar)) as tmp:
+            classes = os.path.join(tmp, "classes")
+            subprocess.run(
+                [
+                    os.path.join(java_bin, "javac"), "-proc:none", "-d", classes,
+                    "-cp", os.path.join(spark_home, "jars", "*"), _NIO_FS_SOURCE,
+                ],
+                stdin=subprocess.DEVNULL,
+                capture_output=True,
+                check=True,
+                timeout=_COMPILE_TIMEOUT_S,
+            )
+            part = os.path.join(tmp, "part.jar")
+            with zipfile.ZipFile(part, "w") as zf:
+                for entry in sorted(glob.glob("**/*.class", root_dir=classes, recursive=True)):
+                    zf.write(os.path.join(classes, entry), entry.replace(os.sep, "/"))
+            os.replace(part, jar)
+    except (OSError, subprocess.SubprocessError):
+        return False
+    return True
+
+
 @contextlib.contextmanager
-def _conf_dir(path: str):
-    """``SPARK_CONF_DIR`` set to ``path`` for the gateway launch only."""
-    before = os.environ.get("SPARK_CONF_DIR")
-    os.environ["SPARK_CONF_DIR"] = path
+def _launch_env(env: dict[str, str]):
+    """``env`` set in ``os.environ`` for the gateway launch only."""
+    before = {name: os.environ.get(name) for name in env}
+    os.environ.update(env)
     try:
         yield
     finally:
-        if before is None:
-            del os.environ["SPARK_CONF_DIR"]
-        else:
-            os.environ["SPARK_CONF_DIR"] = before
+        for name, value in before.items():
+            if value is None:
+                del os.environ[name]
+            else:
+                os.environ[name] = value
 
 
 def _promote(archive: _Archive, returncode: int | None) -> None:

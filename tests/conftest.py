@@ -2,6 +2,9 @@ from __future__ import annotations
 
 import contextlib
 import importlib.util
+import os
+import tempfile
+from types import SimpleNamespace
 
 import pytest
 
@@ -117,6 +120,31 @@ def count_jobs(spark, group, fn):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@contextlib.contextmanager
+def count_process_starts(spark, prefix):
+    """Count the processes the driver JVM starts inside the block whose
+    command line begins with ``prefix`` (e.g. ``"chmod "``): an in-JVM JFR
+    recording of ``jdk.ProcessStart`` events, dumped and read back when the
+    block exits. Yields a namespace whose ``count`` is then set."""
+    jvm = spark._jvm
+    starts = SimpleNamespace(count=None)
+    recording = jvm.jdk.jfr.Recording()
+    try:
+        recording.enable("jdk.ProcessStart")
+        recording.start()
+        yield starts
+        recording.stop()
+        with tempfile.TemporaryDirectory() as tmp:
+            dump = jvm.java.io.File(os.path.join(tmp, "starts.jfr")).toPath()
+            recording.dump(dump)
+            events = jvm.jdk.jfr.consumer.RecordingFile.readAllEvents(dump)
+            starts.count = sum(
+                1 for event in events if event.getString("command").startswith(prefix)
+            )
+    finally:
+        recording.close()
 
 
 @contextlib.contextmanager

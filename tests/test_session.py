@@ -9,14 +9,19 @@ one on a local master, Spark's default on any other, still refusing to
 overwrite, and able to resume a checkpoint the default one started. The
 driver JVM's CDS archive: its claim, key, size check and promotion as
 plain functions over a fake JDK and Spark install, then one session that
-dumps it and one that maps it."""
+dumps it and one that maps it. The NIO local file system: no ``chmod``
+process for a partitioned write or a checkpointed stream, the same file
+modes as the stock file system, and which launches get its jar (plain
+functions over a fake ``javac``)."""
 
 from __future__ import annotations
 
 import json
 import os
+import stat
 import subprocess
 import sys
+import zipfile
 from types import SimpleNamespace
 
 import pytest
@@ -26,7 +31,7 @@ import spark_worker_daemon
 from big_data_toolkit_spark import session
 from big_data_toolkit_spark.catalog import load_table
 from big_data_toolkit_spark.streaming import trending, windows
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, count_process_starts
 
 
 def _fake_spark_home(tmp_path, with_tree=True):
@@ -463,11 +468,11 @@ def test_conf_dir_with_a_user_file_gives_no_archive(cds_env, tmp_path, monkeypat
 
 def test_conf_dir_is_swapped_only_for_the_launch(monkeypatch):
     monkeypatch.setenv("SPARK_CONF_DIR", "/user/conf")
-    with session._conf_dir("/cache/conf"):
+    with session._launch_env({"SPARK_CONF_DIR": "/cache/conf"}):
         assert os.environ["SPARK_CONF_DIR"] == "/cache/conf"
     assert os.environ["SPARK_CONF_DIR"] == "/user/conf"
     monkeypatch.delenv("SPARK_CONF_DIR")
-    with session._conf_dir("/cache/conf"):
+    with session._launch_env({"SPARK_CONF_DIR": "/cache/conf"}):
         pass
     assert "SPARK_CONF_DIR" not in os.environ
 
@@ -491,15 +496,26 @@ with open(f"/proc/{SparkContext._gateway.proc.pid}/maps") as fh:
         line.split()[-1] for line in fh
         if line.split()[-1].startswith(cache) and line.rstrip().endswith(".jsa")
     })
-print(json.dumps({"count": count, "mapped": mapped}))
+jvm = spark._jvm
+FileSystem = jvm.org.apache.hadoop.fs.FileSystem
+fs = FileSystem.get(
+    jvm.java.net.URI("file:///"), spark.sparkContext._jsc.hadoopConfiguration()
+).getClass().getName()
+stock = FileSystem.getFileSystemClass("file", jvm.org.apache.hadoop.conf.Configuration()).getName()
+print(json.dumps({"count": count, "mapped": mapped, "fs": fs, "stock_fs": stock}))
 """
 
 
 def test_first_session_dumps_the_archive_and_the_next_maps_it(tmp_path):
     """Two real sessions on a fresh cache. The first dumps: it exits
     without stopping, the ``atexit`` hook waits for its JVM, and the
-    archive is promoted; its stdout holds only the script's own line. The
-    second maps that archive and runs a job."""
+    archive is promoted; its stdout holds only the script's own line; it
+    runs the file system Hadoop picks without ``fs.file.impl`` (with the
+    Hive jars of a stock Spark build, Hive's ``ProxyLocalFileSystem``). The
+    second compiles the NIO file system's
+    jar, appends it to its class path, still maps that archive (a jar
+    ahead of the dumped class path would make the JDK reject it) and runs
+    a job."""
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     env = dict(os.environ, XDG_CACHE_HOME=str(tmp_path), PYTHONPATH=root)
     cds = tmp_path / "big_data_toolkit_spark/cds"
@@ -517,14 +533,244 @@ def test_first_session_dumps_the_archive_and_the_next_maps_it(tmp_path):
     try:
         first = run()
         archives = list(cds.glob("*.jsa"))
-        assert first == {"count": 1, "mapped": []}
+        assert (first["count"], first["mapped"]) == (1, [])
+        assert first["fs"] == first["stock_fs"] != session._NIO_FS_CLASS
         assert len(archives) == 1
         assert _files(cds) == [archives[0].name]  # no claim, no .part
         size = int(archives[0].stem.rsplit("-", 1)[1])
         assert archives[0].stat().st_size == size
 
-        assert run() == {"count": 1, "mapped": [str(archives[0])]}
+        assert run() == {
+            "count": 1, "mapped": [str(archives[0])],
+            "fs": session._NIO_FS_CLASS, "stock_fs": first["stock_fs"],
+        }
     finally:
         for path in cds.glob("*"):
             if path.is_file():
                 path.unlink()
+
+
+# --- Local file system without chmod forks ------------------------------
+
+_STOCK_FS = "org.apache.hadoop.fs.LocalFileSystem"
+
+
+@pytest.fixture
+def nio_spark(spark):
+    """The shared session, which runs ``bdts.NioLocalFileSystem``. The one
+    exception is the launch that dumped the CDS archive (the first session
+    on a machine), which runs the stock file system by design."""
+    if spark.sparkContext._jsc.hadoopConfiguration().get("fs.file.impl") is None:
+        options = spark.sparkContext.getConf().get(session._JAVA_OPTIONS_KEY, "")
+        assert "-XX:ArchiveClassesAtExit" in options, "stock FS without a dump"
+        pytest.skip("the shared session dumps the CDS archive: stock file system")
+    return spark
+
+
+def _local_fs(spark):
+    jvm = spark._jvm
+    return jvm.org.apache.hadoop.fs.FileSystem.get(
+        jvm.java.net.URI("file:///"), spark.sparkContext._jsc.hadoopConfiguration()
+    )
+
+
+def _modes(root):
+    """Permission bits of ``root`` and everything under it, by relative path."""
+    return {
+        str(path.relative_to(root)): stat.S_IMODE(path.stat().st_mode)
+        for path in (root, *root.rglob("*"))
+    }
+
+
+def _assert_default_modes(root):
+    """Files 644 and directories 755: Hadoop's default umask, 022."""
+    for rel, mode in _modes(root).items():
+        assert mode == (0o755 if (root / rel).is_dir() else 0o644), rel
+
+
+def test_partitioned_write_starts_no_chmod(nio_spark, tmp_path):
+    table = tmp_path / "table"
+    rows = nio_spark.range(500).selectExpr("id", "id % 16 AS cell")
+
+    with count_process_starts(nio_spark, "chmod ") as starts:
+        rows.write.partitionBy("cell").parquet(str(table))
+
+    assert starts.count == 0
+    assert len(list(table.glob("cell=*"))) == 16
+    assert nio_spark.read.parquet(str(table)).count() == 500
+    _assert_default_modes(table)
+
+
+def test_checkpointed_stateful_stream_starts_no_chmod(nio_spark, tmp_path):
+    src, out = str(tmp_path / "src"), tmp_path / "out"
+    schema, write = _event_half_writer(nio_spark, src)
+    write(0)
+    write(1)
+
+    with count_process_starts(nio_spark, "chmod ") as starts:
+        progress = _replay_trending(nio_spark, schema, src, str(out))
+
+    assert [p["batchId"] for p in progress] == [0, 1]
+    assert starts.count == 0
+    _assert_default_modes(out / "ckpt")
+
+
+def test_nio_and_stock_file_systems_create_the_same_modes(nio_spark, tmp_path):
+    """The same directories and file, checksum included, through the
+    session's file system and a stock ``LocalFileSystem`` in the same JVM:
+    the same modes, and only the stock one starts ``chmod`` (so the count
+    is not blind)."""
+    jvm = nio_spark._jvm
+    nio = _local_fs(nio_spark)
+    stock = jvm.org.apache.hadoop.fs.LocalFileSystem()
+    stock.initialize(nio.getUri(), nio.getConf())
+    assert nio.getClass().getName() == session._NIO_FS_CLASS
+
+    modes, chmods = {}, {}
+    for name, fs in (("nio", nio), ("stock", stock)):
+        root = tmp_path / name
+        with count_process_starts(nio_spark, "chmod ") as starts:
+            fs.mkdirs(jvm.org.apache.hadoop.fs.Path(str(root / "a/b")))
+            fs.create(jvm.org.apache.hadoop.fs.Path(str(root / "a/b/f"))).close()
+        modes[name], chmods[name] = _modes(root), starts.count
+
+    assert chmods["nio"] == 0 and chmods["stock"] >= 1
+    assert modes["nio"] == modes["stock"]
+    assert modes["nio"] == {
+        ".": 0o755, "a": 0o755, "a/b": 0o755, "a/b/f": 0o644, "a/b/.f.crc": 0o644,
+    }
+
+
+def test_atomic_create_that_may_overwrite_replaces_the_file(nio_spark, tmp_path):
+    """Spark writes state-store deltas and snapshots with
+    ``overwriteIfPossible``, and the rename behind it replaces an existing
+    file, as on Hadoop's ``LocalFileSystem``. (Hive's
+    ``ProxyLocalFileSystem``, which Hadoop otherwise resolves ``file:`` to
+    on a Spark build with the Hive jars, keeps the old file and leaves the
+    temporary one behind.)"""
+    manager = _checkpoint_manager(nio_spark, str(tmp_path))
+    target = nio_spark._jvm.org.apache.hadoop.fs.Path(str(tmp_path / "1.delta"))
+    for byte in (1, 2):
+        out = manager.createAtomic(target, True)
+        out.write(byte)
+        out.close()
+
+    assert (tmp_path / "1.delta").read_bytes() == bytes([2])
+    assert sorted(os.listdir(tmp_path)) == [".1.delta.crc", "1.delta"]
+
+
+def test_sticky_permission_still_sets_the_sticky_bit(nio_spark, tmp_path):
+    jvm = nio_spark._jvm
+    shared = tmp_path / "shared"
+    shared.mkdir()
+
+    _local_fs(nio_spark).setPermission(
+        jvm.org.apache.hadoop.fs.Path(str(shared)),
+        jvm.org.apache.hadoop.fs.permission.FsPermission("1777"),
+    )
+
+    assert stat.S_IMODE(shared.stat().st_mode) == 0o1777
+
+
+# A javac that prints, as javac does, and writes the two class files.
+_FAKE_JAVAC = """#!/bin/sh
+echo "Note: compiling"
+while [ "$1" != "-d" ]; do shift; done
+mkdir -p "$2/bdts"
+printf 'class' > "$2/bdts/NioLocalFileSystem.class"
+printf 'class' > "$2/bdts/NioLocalFileSystem\\$Raw.class"
+"""
+
+
+@pytest.fixture
+def nio_env(cds_env, monkeypatch):
+    """``cds_env`` with a promoted archive, a fake ``javac`` next to its
+    ``java``, and no JVM running, as before a launch. Returns the jar
+    cache directory."""
+    _dump_and_promote()
+    javac = cds_env.parents[2] / "jdk/bin/javac"
+    javac.write_text(_FAKE_JAVAC)
+    javac.chmod(0o755)
+    monkeypatch.setattr(session.SparkContext, "_gateway", None)
+    monkeypatch.delenv("PYSPARK_GATEWAY_PORT", raising=False)
+    return cds_env.parent / "jvm"
+
+
+def test_local_launch_appends_the_compiled_jar_and_maps_the_archive(nio_env, capfd):
+    launch = session._launch("local[4]", None)
+
+    jars = list(nio_env.iterdir())  # the temporary build directory is gone
+    assert [p.suffix for p in jars] == [".jar"]
+    with zipfile.ZipFile(jars[0]) as zf:
+        assert sorted(zf.namelist()) == [
+            "bdts/NioLocalFileSystem$Raw.class", "bdts/NioLocalFileSystem.class",
+        ]
+    assert launch.conf[session._FS_IMPL_KEY] == session._NIO_FS_CLASS
+    assert launch.env[session._DIST_CLASSPATH_ENV] == str(jars[0])
+    assert "-XX:SharedArchiveFile=" in launch.conf[session._JAVA_OPTIONS_KEY]
+    assert capfd.readouterr().out == ""
+
+    (nio_env.parents[2] / "jdk/bin/javac").unlink()
+    assert session._launch("local[4]", None) == launch  # compiled once
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        "no-javac", "failed-compile", "uncreatable-cache", "standalone",
+        "running-gateway", "gateway-port", "extra-conf", "dumping",
+    ],
+)
+def test_stock_file_system_when_the_jar_cannot_join_the_launch(nio_env, monkeypatch, capfd, case):
+    master, extra = "local[4]", None
+    javac = nio_env.parents[2] / "jdk/bin/javac"
+    if case == "no-javac":
+        javac.unlink()
+    elif case == "failed-compile":
+        javac.write_text("#!/bin/sh\necho 'error: bad source'\necho 'error' >&2\nexit 1\n")
+    elif case == "uncreatable-cache":
+        nio_env.write_text("")
+    elif case == "standalone":
+        master = "spark://h:7077"
+    elif case == "running-gateway":
+        monkeypatch.setattr(session.SparkContext, "_gateway", object())
+    elif case == "gateway-port":
+        monkeypatch.setenv("PYSPARK_GATEWAY_PORT", "1")
+    elif case == "extra-conf":
+        extra = {session._FS_IMPL_KEY: _STOCK_FS}
+    elif case == "dumping":
+        for archive in nio_env.parent.glob("cds/*.jsa"):
+            archive.unlink()
+
+    launch = session._launch(master, extra)
+
+    assert session._FS_IMPL_KEY not in launch.conf
+    assert session._DIST_CLASSPATH_ENV not in launch.env
+    assert not nio_env.is_dir() or not list(nio_env.glob("*.jar"))
+    assert capfd.readouterr().out == ""
+    if case == "dumping":
+        assert launch.archive.part is not None
+
+
+def test_user_dist_classpath_gets_the_jar_appended_for_the_launch_only(nio_env, monkeypatch):
+    monkeypatch.setenv(session._DIST_CLASSPATH_ENV, "/user/a.jar")
+    seen = {}
+
+    class Builder:
+        def config(self, key, value):
+            seen[key] = value
+            return self
+
+        def getOrCreate(self):
+            seen["launch classpath"] = os.environ[session._DIST_CLASSPATH_ENV]
+            return "spark"
+
+    assert session._get_or_create(Builder(), "local[4]", None) == "spark"
+
+    (jar,) = nio_env.glob("*.jar")
+    # The user's entry already rules out the archive; the jar goes after it.
+    assert seen == {
+        session._FS_IMPL_KEY: session._NIO_FS_CLASS,
+        "launch classpath": f"/user/a.jar{os.pathsep}{jar}",
+    }
+    assert os.environ[session._DIST_CLASSPATH_ENV] == "/user/a.jar"
